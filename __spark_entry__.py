@@ -28,88 +28,13 @@ def entry(spark: SparkSession) -> DataFrame:
     return CATALOG["q5_revenue_by_nation"].builder(spark, "/root/testdata/sf0.001")
 
 
-# The driver verifies queries in dict order and stops at a budget cutoff
-# (~50 queries). Surface queries with no green certification yet FIRST, so
-# a cutoff lands on already-proven ones instead of leaving the newest
-# operators as unverified claims.
-_VERIFY_FIRST: tuple[str, ...] = (
-    # --- round-12 (OPTIMIZATION round): queries whose PHYSICAL PLAN
-    # changed this round lead — lineage-truncation (localCheckpoint),
-    # codegen melt reshapes, the one-pass window-norm embed — so the
-    # driver's budgeted pass re-certifies every changed path first.
-    # All of them (and the full 257) were oracle-verified at sf0.01 and
-    # sf0.001 by the builder this round; this ordering is risk
-    # coverage, not the only proof. The r6-staleness drain (r11 VERDICT
-    # #1) follows immediately after.
-    "q_li_from_index",
-    "q_er_golden_increment", "q_er_golden_cross_epoch",
-    "q_er_match_increment", "q_stream_er_gate",
-    "q_local_clustering", "q_triangle_stats",
-    "q_late_interaction_topk", "q_li_recall_check",
-    "q_video_neardup",
-    "q_web_curation_pipeline", "q_er_indel_pairs", "q_er_golden_record",
-    "q_er_clusters", "q_er_candidate_pairs",
-    "q_text_hash_embed", "q_text_embed_neighbors",
-    "q_dsir_weights", "q_dsir_topk", "q_dsir_from_model",
-    "q_lm_scores", "q_lm_from_counts", "q_lm_ccnet_gate",
-    "q_ccnet_buckets", "q_llm_training_set", "q_stream_lm_scores",
-    "q_span_dedup_rewrite", "q_span_longest_match", "q_span_dedup_stats",
-    "q_dedup_minhash_lsh", "q_dedup_ngram_jaccard", "q_dedup_lsh_jaccard",
-    "q_dedup_containment", "q_dedup_keep_canonical", "q_dedup_keep_best",
-    "q_dedup_multi_signal", "q_training_set", "q_semdedup_keep",
-    "q_incremental_dedup", "q_cross_source_dups", "q_bigram_coherence",
-    "q_domain_pagerank", "q_personalized_pagerank", "q_crawl_budget",
-    # --- newest driver row = ROUND 6 (27), cheapest-first by the r10
-    # full-sweep sf0.01 relative order — the tier this round drains ---
-    "q_paragraph_dedup", "q_skew_salted_distinct", "q_embed_drift",
-    "q_anchor_terms", "q_domain_blocklist", "q_contamination_report",
-    "q_margin_mining", "q_dsir_topk", "q_unimax_sample",
-    "q_prototype_prune", "q_dsir_weights", "q_stream_source_cap",
-    "q_curation_attrition", "q_lm_scores", "q_doremi_step",
-    "q_lang_confusion", "q_quality_ensemble", "q_bpe_merges", "q_text_nfc",
-    "q_lm_ccnet_gate", "q_stream_neardup_gate", "q_bpe_encode",
-    "q_tokenizer_fertility", "q_domain_pagerank", "q_ccnet_buckets",
-    "q_llm_training_set", "q_stream_lm_scores",
-    # --- newest driver row = ROUND 7 (50), cheapest-first by a fresh
-    # round-12 sf0.01 sweep — the budget tail lands here; round 13
-    # continues the drain from wherever the cutoff falls ---
-    "q_fingerprint", "q_conform_drift", "q_dsl_filter_events",
-    "q_sample_stratified", "q_value_histogram", "q_grouping_sets_mixed",
-    "q_pii_redact", "q_dedup_normalized", "q_data_profile",
-    "q_chunk_documents", "q_pack_sequences", "q_data_mixture",
-    "q_video_meta", "q_quality_gate_percentile", "q_token_rarity",
-    "q_sessionize_events", "q_range_join_attribution",
-    "q_stream_quality_gate", "q_dsir_model", "q_image_phash",
-    "q_cube_distinct_callers", "q_percentile_prices", "q_corpus_stats",
-    "q_tfidf_top_terms", "q_media_meta", "q_image_stats",
-    "q_token_budget", "q_warc_records", "q_image_neardup",
-    "q_text_hash_embed", "q_boilerplate_ngrams", "q_training_set",
-    "q_span_dedup_rewrite", "q_warc_domain_stats",
-    "q_text_embed_neighbors", "q_stream_session_windows",
-    "q_union_default_region", "q_dsir_from_model", "q_lm_from_counts",
-    "q_stream_image_gate", "q_image_dup_clusters",
-    "q_stream_hourly_counts", "q_audio_stats", "q_unigram_lm_vocab",
-    "q_unigram_fertility", "q_crawl_budget", "q1_pricing_summary",
-    "q_unigram_encode", "q_approx_sketches", "q_web_curation_pipeline",
-)
-
-
-def _ordered() -> list[str]:
-    # dedupe while preserving first occurrence: a query may appear both
-    # in the round-12 changed-plan block and in an older rotation tier
-    seen: set[str] = set()
-    first = [n for n in _VERIFY_FIRST
-             if n in CATALOG and not (n in seen or seen.add(n))]
-    return first + [n for n in CATALOG if n not in seen]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: CATALOG[name].builder for name in _ordered()}
+    return {name: spec.builder for name, spec in CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (omitted for non-SQL-expressible ops
     → driver records a weaker rows-only check)."""
-    return {name: CATALOG[name].oracle for name in _ordered()
-            if CATALOG[name].oracle is not None}
+    return {name: spec.oracle for name, spec in CATALOG.items()
+            if spec.oracle is not None}

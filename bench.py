@@ -233,56 +233,6 @@ def _best_prior(sf) -> dict[str, float]:
     return best
 
 
-def _merge_round_local(detail: dict, here: str) -> str:
-    """Fold this run's per-query floors into the CURRENT round's
-    committed detail file, ``BENCH_r{N}_local.json``.
-
-    ``_best_prior`` builds the drift baseline from BENCH_r*.json
-    "queries" dicts, but the stdout line (driver-captured as
-    BENCH_r{N}.json) carries only the baseline-11 subset — without a
-    committed per-round detail file the other ~95 queries silently drop
-    out of regression coverage (r11 did the copy by hand; this automates
-    it). N = 1 + the newest driver-recorded round: the driver writes
-    BENCH_r{N}.json at the END of round N, so while round N+1 is being
-    built the max on disk is N. Merging takes the elementwise per-query
-    MIN across the round's runs — the quiet-floor convention — and keeps
-    the quietest run's noise_ratio for context."""
-    import glob
-    import re
-
-    # only DRIVER-written round markers (BENCH_r{N}.json exactly) count:
-    # builder-written *_local files would bump the round on every run
-    ns = [int(m.group(1)) for p in glob.glob(
-              os.path.join(here, "BENCH_r*.json"))
-          if (m := re.fullmatch(r"BENCH_r0*(\d+)\.json",
-                                os.path.basename(p)))]
-    stamp = os.path.join(here, f"BENCH_r{max(ns, default=0) + 1:02d}_local.json")
-    merged = dict(detail)
-    try:
-        with open(stamp) as f:
-            prev = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        prev = None
-    if prev and prev.get("sf") == detail["sf"] \
-            and prev.get("method") == detail["method"] \
-            and prev.get("parallelism") == detail["parallelism"]:
-        qs = dict(prev.get("queries") or {})
-        for q, t in detail["queries"].items():
-            qs[q] = min(qs[q], t) if q in qs else t
-        merged["queries"] = qs
-        merged["value"] = round(sum(qs.values()), 3)
-        merged["noise_ratio"] = min(prev.get("noise_ratio", 9.9),
-                                    detail["noise_ratio"])
-        merged["merged_runs"] = prev.get("merged_runs", 1) + 1
-        merged.pop("runs", None)        # raw samples live in _latest only
-        merged.pop("regressions", None)
-    else:
-        merged["merged_runs"] = 1
-    with open(stamp, "w") as f:
-        json.dump(merged, f, indent=1)
-    return os.path.basename(stamp)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -303,9 +253,9 @@ def main() -> None:
             continue
         samples = []
         for _ in range(n_runs):
-            # timings measure the FULL plan, never a warm shared-fixture
-            # cache (llm_catalog persists dedup subtrees for the serial
-            # correctness pass — that's a different workload)
+            # timings measure the FULL plan, never a warm shared cut
+            # (barrier.shared_cut keeps dedup/edge/hash subtrees for the
+            # serial correctness pass — that's a different workload)
             llm_catalog.clear_fixture_cache()
             t0 = time.perf_counter()
             # noop sink, NOT count(): count() lets Catalyst prune every
@@ -335,9 +285,7 @@ def main() -> None:
     # effective parallelism, echoed on the stdout line so a core-count
     # probe is diagnosable (r12 PERF flagged suspect_cpus_ignored: the
     # $SPARK_GRAFT_CPUS knob IS honored — session.py builds
-    # local[$SPARK_GRAFT_CPUS] — but nothing in the output proved it);
-    # it also keys the round-local quiet-floor merge, so 8-core and
-    # 32-core runs never min-merge into one baseline
+    # local[$SPARK_GRAFT_CPUS] — but nothing in the output proved it)
     par = spark.sparkContext.defaultParallelism
     detail = {
         "metric": "catalog_headline_wall",
@@ -355,7 +303,6 @@ def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_detail_latest.json"), "w") as f:
         json.dump(detail, f, indent=1)
-    _merge_round_local(detail, here)
     # stdout: ONE short line that fits whole inside the driver's
     # 2000-char tail capture — totals + the baseline-11 gate subset;
     # everything else lives in BENCH_detail_latest.json

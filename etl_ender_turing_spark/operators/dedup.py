@@ -1454,23 +1454,6 @@ def consecutive_dedup(df, key_col: str = "user_id",
             .drop("_prev", "_has_prev"))
 
 
-def consecutive_dedup_sql(table: str, key_col: str = "user_id",
-                          order_cols: tuple[str, ...] = ("ts", "event_id"),
-                          value_col: str = "event_type") -> str:
-    order = ", ".join(order_cols)
-    return f"""
-    SELECT * EXCLUDE (_prev, _has_prev) FROM (
-      SELECT *,
-             LAG({value_col}) OVER (PARTITION BY {key_col}
-                                    ORDER BY {order}) AS _prev,
-             LAG(1) OVER (PARTITION BY {key_col}
-                          ORDER BY {order}) AS _has_prev
-      FROM {table}
-    ) WHERE _has_prev IS NULL
-       OR NOT ({value_col} IS NOT DISTINCT FROM _prev)
-    """
-
-
 # --------------------------------------------------------------------------
 # paragraph-level dedup (RefinedWeb granularity)
 # --------------------------------------------------------------------------

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.barrier import lineage_cut
+from ..functions.barrier import lineage_cut, shared_cut
 
 # Shared Spark/DuckDB SQL fragments — ONE text parsed by both engines so
 # the double arithmetic is literally the same expression tree (the
@@ -191,7 +191,8 @@ def crawl_budget(ranks: DataFrame, quality: DataFrame, n_slots: int = 1000,
     tw = w.agg(F.sum("w6").alias("tw"))
     # shares feeds BOTH the leftover total and the final projection —
     # checkpoint so the join+quantize chain runs once (no cross-consumer
-    # CSE in Spark plans)
+    # CSE in Spark plans); local in every barrier mode: one row per domain,
+    # read only inside this call, where the layout pin below is local anyway
     shares = (w.crossJoin(F.broadcast(tw))
               .select(domain_col, "w6",
                       F.expr(f"({n_slots} * w6) div tw").alias("fl"),
@@ -200,10 +201,7 @@ def crawl_budget(ranks: DataFrame, quality: DataFrame, n_slots: int = 1000,
     lo = shares.agg((F.lit(n_slots) - F.sum("fl")).alias("left_over"))
     # pin the sampled range boundaries: the counts job and the final job
     # must see the SAME layout (repartitionByRange re-samples per job)
-    # layout-pinning barrier: stays a LOCAL checkpoint in every
-    # lineage_cut mode — a storage barrier's parquet read-back would
-    # drop the range-partition layout that the _pid collect below and
-    # the final projection must both observe identically
+    # local in every barrier mode: a storage read-back drops the layout
     ranged = (shares.repartitionByRange(
         n_ranges, F.col("rem").desc(), F.col(domain_col).asc())
         .localCheckpoint(eager=True))
@@ -255,23 +253,6 @@ def crawl_budget_sql(ranks_sql: str, quality_sql: str,
     """
 
 
-# (applicationId, canonicalized-plan hash) -> persisted symmetrized edge
-# list. Keyed + clearable so repeated triangle/clustering invocations
-# (every bench sample, every correctness pass) REUSE one cached frame
-# instead of pinning a fresh one in the SQL CacheManager for the
-# session's lifetime — the unbounded-growth leak ADVICE r11 flagged.
-# plans.clear_fixture_cache() drains this alongside the fixture cache.
-_SYM_CACHE: dict[tuple, DataFrame] = {}
-
-
-def clear_sym_cache() -> None:
-    """Drop the cached symmetrized edge lists. The frames are
-    localCheckpoint-backed (not persist), so there is nothing to
-    unpersist: checkpoint blocks are released by the ContextCleaner
-    when the dropped references are GC'd."""
-    _SYM_CACHE.clear()
-
-
 def _sym_und(edges: DataFrame) -> DataFrame:
     """Symmetrized, deduped undirected edge list, MATERIALIZED: the
     triangle machinery re-reads this frame 3-6x (degree agg,
@@ -284,22 +265,15 @@ def _sym_und(edges: DataFrame) -> DataFrame:
     — which, unlike persist, also TRUNCATES the logical plan, so
     Catalyst stops re-analyzing the full parse lineage once per
     consumer branch (the r12 profile showed a ~3.5k-line analyzed plan
-    behind a 44-line executed one; guide §3.3/§7.3). Keyed by (app id,
-    canonicalized plan) in ``_SYM_CACHE`` so re-invocations share ONE
-    materialization and ``clear_sym_cache`` can release it."""
-    key = (edges.sparkSession.sparkContext.applicationId,
-           edges._jdf.queryExecution().analyzed().semanticHash())
-    hit = _SYM_CACHE.get(key)
-    if hit is not None:
-        return hit
+    behind a 44-line executed one; guide §3.3/§7.3). A shared cut, so
+    repeated triangle/clustering calls over the same edge plan reuse ONE
+    materialization."""
     e = (edges.select(F.col("src").cast("string").alias("a"),
                       F.col("dst").cast("string").alias("b"))
          .filter(F.col("a") != F.col("b")))
-    df = lineage_cut(
+    return shared_cut(
         e.unionByName(e.select(F.col("b").alias("a"),
                                F.col("a").alias("b"))).distinct())
-    _SYM_CACHE[key] = df
-    return df
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:

@@ -38,6 +38,7 @@ def bounded_value_histogram(df: DataFrame, value_col: str,
     score first (``FLOOR(score * 100)``, a width_bucket, or
     ``percentile_disc`` pre-binning), never to widen the cap.
     """
+    # local in every barrier mode: <= max_cardinality rows, not worth a cut dir
     vals = (df.groupBy(value_col)
             .agg(F.count(F.lit(1)).alias(cnt_col))
             .localCheckpoint(eager=True))

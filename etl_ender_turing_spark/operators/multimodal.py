@@ -36,7 +36,7 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
-from ..functions.barrier import lineage_cut
+from ..functions.barrier import shared_cut
 
 MEDIA_META = T.StructType([
     T.StructField("media_type", T.StringType()),     # image | audio | video
@@ -2891,43 +2891,6 @@ def planted_mjpeg_hash_sql(table: str = "documents",
     """
 
 
-# (applicationId, canonicalized-plan hash) -> persisted frame-hash
-# table: video_neardup consumes its input FOUR times (coverage counts,
-# band melt, both sides of the verify self-join), and each re-read
-# would re-run the whole synthesize + Arrow JPEG-decode subtree — the
-# r11 floor drift (3.8 -> 5.1 s) was exactly the two extra reads the
-# r9 frame-coverage join added. The hash table is metadata-thin (3
-# BIGINTs per frame), so persisting it once is the natural pipeline
-# break — at 100 TB it is a parquet table, here a MEMORY_AND_DISK
-# cache. Same keyed/clearable convention as graph._SYM_CACHE;
-# plans.clear_fixture_cache() drains it.
-_HASH_CACHE: dict[tuple, DataFrame] = {}
-
-
-def clear_hash_cache() -> None:
-    """Drop the cached frame-hash tables. The frames are lineage_cut
-    (localCheckpoint-backed, not persist), so there is nothing to
-    unpersist: checkpoint blocks are released by the ContextCleaner
-    when the dropped references are GC'd."""
-    _HASH_CACHE.clear()
-
-
-def _cached_hashes(hashes: DataFrame) -> DataFrame:
-    # localCheckpoint, not persist: the frame-hash table feeds four
-    # consumers, and persist would keep the full synthesize + Arrow
-    # JPEG-decode lineage in every consumer's analyzed plan (Catalyst
-    # re-analyzes it per branch — guide §3.3/§7.3); the checkpoint
-    # truncates the plan at this barrier and its RDD is released when
-    # the cache entry drops.
-    key = (hashes.sparkSession.sparkContext.applicationId,
-           hashes._jdf.queryExecution().analyzed().semanticHash())
-    hit = _HASH_CACHE.get(key)
-    if hit is None:
-        hit = lineage_cut(hashes)
-        _HASH_CACHE[key] = hit
-    return hit
-
-
 def video_neardup(hashes: DataFrame, max_total_hamming: int = 4,
                   id_col: str = "doc_id",
                   max_bucket: int = 1000) -> DataFrame:
@@ -2958,7 +2921,10 @@ def video_neardup(hashes: DataFrame, max_total_hamming: int = 4,
             f"max_total_hamming={max_total_hamming} breaks the pigeonhole"
             f" candidate guarantee: floor(T/{VIDEO_FRAMES}) must be <= 3"
             f" (4 bands of 15 bits); got {max_total_hamming // VIDEO_FRAMES}")
-    hashes = _cached_hashes(hashes)
+    # the frame-hash table feeds four consumers (coverage counts, band
+    # melt, both sides of the verify self-join); one shared cut keeps the
+    # synthesize + Arrow JPEG-decode subtree from re-running per read
+    hashes = shared_cut(hashes)
     nf = hashes.groupBy(id_col).agg(F.count("*").alias("nf"))
     melted = hashes.select(
         F.col(id_col), F.col("frame_idx"), F.col("simhash"),

@@ -137,6 +137,7 @@ def token_budget_head(df: DataFrame, budget: int, quality_col: str,
         n_ranges, F.col(quality_col).desc(), F.col(id_col))
     # pin the sampled range boundaries: the offsets job and the final job
     # must see the SAME layout (repartitionByRange re-samples per job)
+    # local in every barrier mode: a storage read-back drops the layout
     ranged = ranged.localCheckpoint(eager=True)
     pid = ranged.withColumn("_pid", F.spark_partition_id())
     totals = {r["_pid"]: r["_t"] for r in
@@ -639,6 +640,7 @@ def curriculum_order(df: DataFrame, score_col: str, n_buckets: int = 10,
                                   F.col("_key"), F.col(id_col))
     # pin the sampled boundaries: offsets job and final job must see the
     # SAME layout (repartitionByRange re-samples per job)
+    # local in every barrier mode: a storage read-back drops the layout
     ranged = ranged.localCheckpoint(eager=True)
     pid = ranged.withColumn("_pid", F.spark_partition_id())
     counts = {r["_pid"]: r["_c"] for r in

@@ -29,28 +29,10 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 TOKEN_REGEX = r"[a-z0-9]+|[^a-z0-9\s]"
 
 
-def token_count(text_col: str = "text") -> Column:
-    """Whitespace token count — the reference's words_count semantics."""
-    return F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-
-
 def regex_token_count(text_col: str = "text") -> Column:
     """BPE-ish token count via regexp_extract_all."""
     return F.size(F.regexp_extract_all(F.lower(F.col(text_col)),
                                        F.lit(TOKEN_REGEX), 0))
-
-
-def lang_scores(text_col: str = "text") -> list[Column]:
-    """Per-language marker-stopword hit counts (token-exact, not substring)."""
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    cols = []
-    for lang, words in STOPWORDS.items():
-        arr = "array(" + ", ".join(f"'{w}'" for w in words) + ")"
-        cols.append(F.expr(
-            f"size(filter(split(lower({text_col}), ' '),"
-            f" t -> array_contains({arr}, t)))").alias(f"score_{lang}"))
-    _ = toks
-    return cols
 
 
 def lang_guess_expr(text_col: str = "text") -> Column:
@@ -126,17 +108,6 @@ def fingerprint(text_col: str = "text") -> Column:
     (The rolling-hash variant for shift-tolerant matching is the simhash
     op in dedup.py.)"""
     return F.md5(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "))
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full stat battery — one narrow projection, no shuffle."""
-    cols = quality_columns(text_col)
-    out = df
-    for name, c in cols.items():
-        out = out.withColumn(name, c)
-    return (out.withColumn("lang_guess", lang_guess_expr(text_col))
-            .withColumn("fingerprint", fingerprint(text_col))
-            .withColumn("n_regex_tokens", regex_token_count(text_col)))
 
 
 # --------------------------------------------------------------------------

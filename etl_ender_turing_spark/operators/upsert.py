@@ -190,6 +190,7 @@ def upsert_parquet_partitioned(spark, source: DataFrame, path: str,
     # break lineage off the target path before overwriting it (Spark
     # refuses to overwrite a path it is reading); localCheckpoint
     # materializes the merged partitions — which are small by construction
+    # local in every barrier mode: a storage cut would write them twice
     merged = merged.localCheckpoint(eager=True)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

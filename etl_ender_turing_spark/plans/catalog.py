@@ -74,11 +74,6 @@ def davg(expr_sql: str, scale: int = 6) -> F.Column:
         f" / COUNT({expr_sql})")
 
 
-def davg_sql(expr_sql: str, scale: int = 6) -> str:
-    return (f"CAST(SUM(CAST(({expr_sql}) AS DECIMAL(28,{scale}))) AS DOUBLE)"
-            f" / COUNT({expr_sql})")
-
-
 # =========================================================================
 # Aggregation (SURVEY §2.5) — pricing summary, TPC-H Q1 shape
 # =========================================================================

@@ -95,5 +95,6 @@ def upsert_bucketed(spark: SparkSession, source: DataFrame, table: str,
     target = spark.table(table)
     merged = merge_dataframes(target, source.select(*target.columns),
                               key, order_col)
+    # local in every barrier mode: a storage cut would write the rows twice
     merged = merged.localCheckpoint(eager=True)
     write_bucketed(merged, table, bucket_cols, n_buckets, path=path)

@@ -1,17 +1,18 @@
 """lineage_cut — the conf-switched lineage-cut barrier
 (functions/barrier.py). Local mode must behave exactly like
 localCheckpoint (plan truncated, same rows); storage mode must produce
-identical rows through a fault-tolerant parquet round-trip; none must
-be a no-op. Operators call the helper everywhere a multi-consumer or
-iterative plan is cut, so these properties are what keeps the local
-bench and a cluster deployment running the same code."""
+identical rows through a fault-tolerant parquet round-trip; any other
+mode must be rejected. Operators call the helper everywhere a
+multi-consumer or iterative plan is cut, so these properties are what
+keeps the local bench and a cluster deployment running the same code."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_ender_turing_spark.functions.barrier import (
-    _DIR_CONF, _MODE_CONF, lineage_cut)
+    _DIR_CONF, _MODE_CONF, clear_shared_cuts, lineage_cut, shared_cut)
 
 
 def _demo(spark):
@@ -49,13 +50,39 @@ def test_storage_mode_round_trips(spark, tmp_path):
         spark.conf.unset(_DIR_CONF)
 
 
-def test_none_mode_is_identity(spark):
+def test_unknown_mode_is_rejected(spark):
+    """Only ``local`` and ``storage`` exist: a retired mode or a typo
+    must fail loudly, never fall back to the non-fault-tolerant local
+    barrier on a cluster."""
     df = _demo(spark)
-    spark.conf.set(_MODE_CONF, "none")
-    try:
-        assert lineage_cut(df) is df
-    finally:
-        spark.conf.unset(_MODE_CONF)
+    for bad in ("none", "storge"):
+        spark.conf.set(_MODE_CONF, bad)
+        try:
+            with pytest.raises(ValueError) as exc:
+                lineage_cut(df)
+        finally:
+            spark.conf.unset(_MODE_CONF)
+        msg = str(exc.value)
+        assert _MODE_CONF in msg and repr(bad) in msg
+        assert "'local'" in msg and "'storage'" in msg
+
+
+def test_shared_cut_is_keyed_by_plan(spark, tmp_path):
+    """Separately built frames with the same plan share ONE cut; a
+    different plan gets its own; clearing drops them all."""
+    spark.range(50).write.parquet(str(tmp_path / "t"))
+
+    def build(m):
+        return (spark.read.parquet(str(tmp_path / "t"))
+                .select((F.col("id") % m).alias("k")).distinct())
+    clear_shared_cuts()
+    a = shared_cut(build(5))
+    assert shared_cut(build(5)) is a
+    assert shared_cut(build(6)) is not a
+    assert sorted(r.k for r in a.collect()) == list(range(5))
+    clear_shared_cuts()
+    assert shared_cut(build(5)) is not a
+    clear_shared_cuts()
 
 
 def test_operator_matches_across_modes(spark):

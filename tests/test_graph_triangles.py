@@ -86,9 +86,10 @@ def test_local_counts_sum_to_three_times_global(spark):
 
 def test_sym_cache_reuses_and_clears(spark):
     """Repeated triangle/clustering calls over the SAME edge plan must
-    share ONE persisted edge list (keyed by app id + canonical plan),
-    and clear_fixture_cache must release it — the unbounded
-    CacheManager-growth regression (ADVICE r11)."""
+    share ONE materialized edge list (the barrier's shared cut, keyed by
+    app id + canonical plan), and clear_fixture_cache must release it —
+    the unbounded CacheManager-growth regression."""
+    from etl_ender_turing_spark.functions import barrier
     from etl_ender_turing_spark.operators import graph as G
     from etl_ender_turing_spark.plans.llm_catalog import (
         clear_fixture_cache)
@@ -107,12 +108,12 @@ def test_sym_cache_reuses_and_clears(spark):
                       (F.col("doc_id") % 7).cast("string").alias("dst")))
         return df if not extra else df.limit(300)
     G.triangle_count(edges(0)).collect()
-    assert len(G._SYM_CACHE) == 1
+    assert len(barrier._SHARED_CUTS) == 1
     G.local_clustering(edges(0)).collect()
     G.triangle_count(edges(0)).collect()
-    assert len(G._SYM_CACHE) == 1         # same plan -> same entry
+    assert len(barrier._SHARED_CUTS) == 1   # same plan -> same entry
     # a DIFFERENT edge plan gets its own entry
     G.triangle_count(edges(1)).collect()
-    assert len(G._SYM_CACHE) == 2
+    assert len(barrier._SHARED_CUTS) == 2
     clear_fixture_cache()
-    assert len(G._SYM_CACHE) == 0
+    assert len(barrier._SHARED_CUTS) == 0

@@ -661,8 +661,10 @@ def test_video_frame_hashes_drops_garbage(spark):
 
 def test_video_neardup_hash_cache_reuses_and_clears(spark):
     """video_neardup consumes its input 4x — the frame-hash frame must
-    be persisted ONCE through the keyed cache (the r11->r12 floor-drift
-    fix) and released by clear_fixture_cache."""
+    be cut ONCE through the barrier's shared cut (the floor-drift fix),
+    a different input plan gets its own cut, and clear_fixture_cache
+    releases them."""
+    from etl_ender_turing_spark.functions import barrier
     from etl_ender_turing_spark.plans.llm_catalog import (
         clear_fixture_cache)
 
@@ -672,12 +674,14 @@ def test_video_neardup_hash_cache_reuses_and_clears(spark):
             .select("doc_id"))
     hashes = mm.video_frame_hashes(mm.synthesize_planted_mjpeg(docs))
     n = mm.video_neardup(hashes, max_total_hamming=4).count()
-    assert n > 0 and len(mm._HASH_CACHE) == 1
+    assert n > 0 and len(barrier._SHARED_CUTS) == 1
     # re-running the same plan reuses the entry, never adds one
     mm.video_neardup(hashes, max_total_hamming=4).count()
-    assert len(mm._HASH_CACHE) == 1
+    assert len(barrier._SHARED_CUTS) == 1
+    mm.video_neardup(hashes.limit(50), max_total_hamming=4).count()
+    assert len(barrier._SHARED_CUTS) == 2
     clear_fixture_cache()
-    assert len(mm._HASH_CACHE) == 0
+    assert len(barrier._SHARED_CUTS) == 0
 
 
 def test_parse_mp4_meta_box_walk():

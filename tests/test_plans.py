@@ -403,3 +403,14 @@ def test_er_match_increment_plan_shape(spark):
     n_ex = len(re.findall(r"\bExchange\b", plan))
     n_reused = len(re.findall(r"\bReusedExchange\b", plan))
     assert n_ex - n_reused <= 1, plan[:1500]
+
+
+def test_driver_contract_follows_catalog_order():
+    """``queries()`` and ``oracle_sql()`` list the catalog in its own
+    registration order, once each, with an oracle exactly where the
+    catalog has one."""
+    import __spark_entry__ as entry
+
+    assert list(entry.queries()) == list(CATALOG)
+    assert list(entry.oracle_sql()) == [
+        name for name, spec in CATALOG.items() if spec.oracle is not None]

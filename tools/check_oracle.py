@@ -3,19 +3,24 @@
 Runs every catalog query on Spark AND its DuckDB oracle over the same
 parquet, then compares row count, column names, and an order-insensitive
 value multiset (rows sorted, columns sorted by name, values normalized).
-Use while iterating:  python tools/check_oracle.py [sf_dir] [query ...]
+Use while iterating:
+    python tools/check_oracle.py [sf_dir] [query ...] [--conf k=v ...]
+``--conf`` (repeatable) sets a session conf, e.g. a configuration sweep
+with ``--conf spark.etl.lineageCut.mode=storage``.
 """
 
 from __future__ import annotations
 
+import argparse
 import math
+import os
 import sys
 import time
 from datetime import datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_ender_turing_spark.session import get_spark
 from etl_ender_turing_spark.sources.readers import TESTDATA_TABLES
@@ -74,9 +79,21 @@ def pandas_canon_problems(spdf, odf):
     return problems
 
 
+def _conf_pair(kv: str) -> tuple[str, str]:
+    k, sep, v = kv.partition("=")
+    if not (k and sep):
+        raise argparse.ArgumentTypeError(f"expected k=v, got {kv!r}")
+    return k, v
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description="Spark vs DuckDB oracle check")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--conf", type=_conf_pair, action="append", default=[],
+                    metavar="K=V", help="session conf (repeatable)")
+    args = ap.parse_args()
+    sf_dir, only = args.sf_dir, set(args.queries)
 
     from etl_ender_turing_spark.plans import CATALOG
 
@@ -84,7 +101,7 @@ def main() -> int:
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    spark = get_spark("oracle-check")
+    spark = get_spark("oracle-check", extra_conf=dict(args.conf))
     failures = 0
     for name, spec in CATALOG.items():
         if only and name not in only:

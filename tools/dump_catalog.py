@@ -23,8 +23,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def newest_driver_rounds() -> dict[str, int]:
     """Per-query newest round with a green row in any CORRECTNESS file —
-    the staleness ledger the per-round `_VERIFY_FIRST` rotation is
-    derived from (r9 verdict #2)."""
+    the staleness ledger."""
     newest: dict[str, int] = {}
     for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
@@ -47,8 +46,7 @@ def main() -> None:
         "the Spark result against this DuckDB SQL at sf0.01 (rows+schema+",
         "values), \"rows-only\" = non-SQL-expressible op with a weaker check.",
         "\"driver\" = newest round with a green row for this query in a",
-        "CORRECTNESS_r*.json (r0 = not yet driver-certified); the",
-        "per-round `_VERIFY_FIRST` rotation drains the oldest tiers first.",
+        "CORRECTNESS_r*.json (r0 = not yet driver-certified).",
         "",
         f"{len(CATALOG)} queries. Staleness ledger: {ledger}.",
         "",

@@ -1,18 +1,19 @@
-"""Round-13 optimization profiler: per-query noop-sink floors + formatted
-plans.
+"""Optimization profiler: per-query noop-sink floors + formatted plans.
 
 Usage:
-    python tools/profile_r13.py <tag> <query> [query ...]   [--sf DIR] [--runs N]
+    python tools/profile_plans.py <outdir> <tag> <query> [query ...]
+                                  [--sf DIR] [--runs N]
 
-For each named catalog query: clears the fixture cache, times the noop
+For each named catalog query: clears the shared cuts, times the noop
 sink N times (guide §1.4), records the floor, and writes the
 pre-execution ``explain("formatted")`` plus the AQE-final executed plan
-to ``plans/r13/<query>_<tag>.txt`` (tag = before / after). Prints one
-JSON line per query so A/B runs diff cleanly.
+to ``<outdir>/<query>_<tag>.txt`` (e.g. ``plans/r13``, tag = before /
+after). Prints one JSON line per query so A/B runs diff cleanly.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -25,39 +26,32 @@ from etl_ender_turing_spark.session import get_spark
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    sf_dir = "/root/testdata/sf0.1"
-    runs = 3
-    if "--sf" in args:
-        i = args.index("--sf")
-        sf_dir = args[i + 1]
-        del args[i:i + 2]
-    if "--runs" in args:
-        i = args.index("--runs")
-        runs = int(args[i + 1])
-        del args[i:i + 2]
-    tag, queries = args[0], args[1:]
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(here, "plans", "r13")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("outdir")
+    ap.add_argument("tag")
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--runs", type=int, default=3)
+    args = ap.parse_args()
+    sf_dir, outdir = args.sf, args.outdir
     os.makedirs(outdir, exist_ok=True)
 
-    spark = get_spark("profile-r13")
+    spark = get_spark("profile-plans")
     spark.sparkContext.setLogLevel("ERROR")
     # warmup: JVM + parquet footer caches (same convention as bench.py)
     for t in ("lineitem", "documents", "embeddings"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
 
-    for name in queries:
+    for name in args.queries:
         spec = CATALOG.get(name)
         if spec is None:
             print(json.dumps({"query": name, "err": "not in CATALOG"}))
             continue
         samples = []
         df = None
-        for _ in range(runs):
+        for _ in range(args.runs):
             llm_catalog.clear_fixture_cache()
-            spark.sparkContext.setJobDescription(f"r13-profile {name}")
+            spark.sparkContext.setJobDescription(f"profile {name}")
             t0 = time.perf_counter()
             df = spec.builder(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
@@ -68,7 +62,7 @@ def main() -> None:
         formatted = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         executed = df._jdf.queryExecution().executedPlan().toString()
-        path = os.path.join(outdir, f"{name}_{tag}.txt")
+        path = os.path.join(outdir, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(f"# {name} @ {sf_dir}  noop-sink samples: {samples}\n")
             f.write("\n== explain(formatted) ==\n")
@@ -76,8 +70,7 @@ def main() -> None:
             f.write("\n\n== AQE-final executed plan (last sample) ==\n")
             f.write(executed)
         print(json.dumps({"query": name, "floor": min(samples),
-                          "samples": samples,
-                          "plan": os.path.relpath(path, here)}))
+                          "samples": samples, "plan": path}))
     spark.stop()
 
 

@@ -34,8 +34,19 @@ def with_row_metrics(df: DataFrame, name: str,
     return df.observe(obs, *metrics), obs
 
 
+def observed_metrics(obs: Observation) -> dict:
+    """``obs.get``, or ``{}`` when the action saw no rows and Spark dropped
+    the observed node: adaptive execution replaces a stage whose input is
+    provably empty (an empty local relation, ``limit(0)``, a false filter)
+    by an empty relation, observed nodes inside it included, and
+    ``obs.get`` cannot convert the empty metrics row that is left."""
+    if obs._jo is not None and obs._jo.getRow().length() == 0:
+        return {}
+    return obs.get
+
+
 def log_metrics(obs: Observation, entity: str) -> dict:
     """Log and return the observed metrics (post-action)."""
-    got = obs.get
+    got = observed_metrics(obs)
     log.info("progress %s: %s", entity, got)
     return got

@@ -7,12 +7,17 @@ ETL/utils.py:247-253; "UPSERT mode … ET is source of truth"
 DOCS/README.MD:18). That is O(rows) round-trips — the reference's load
 bottleneck.
 
-Here the same semantics are ONE set-based merge per table:
+Here the same semantics are ONE set-based merge per table, computed in
+one pass over the batch:
 
 1. intra-batch dedup: ``row_number() over (partition by key order by
    <recency> desc) = 1`` — last write per unique key wins within a batch;
-2. inter-batch merge: without a transactional table format in this
-   environment we rewrite MERGE as
+2. one eager local cut of the deduped batch. The cut is the batch's only
+   evaluation: it fires the caller's Observations and the upsert's own,
+   which carries the row count (empty batches return here, untouched
+   table) and, on the partitioned path, the touched partition values;
+3. inter-batch merge of the cut: without a transactional table format in
+   this environment we rewrite MERGE as
 
        new_target = source ∪ (target ⟕anti source on key)
 
@@ -20,16 +25,21 @@ Here the same semantics are ONE set-based merge per table:
    unmatched source rows are appended (INSERT), unmatched target rows are
    kept. On Delta Lake this function becomes a single ``MERGE INTO``
    (see docstring of ``merge_sql``) — the join rewrite below is the
-   format-independent fallback with identical results.
+   format-independent fallback with identical results;
+4. write: staging directory and swap (flat tables) or a per-write dynamic
+   partition overwrite (partitioned facts).
 
 Scale: the anti-join shuffles on the unique key; at 100 TB the target should
 be bucketed/partitioned by the same key (date-partitioned for facts) so the
-merge only rewrites touched partitions (standard Delta MERGE behavior).
+merge only rewrites touched partitions (standard Delta MERGE behavior). The
+cut holds one deduped batch (a day of a fact) in executor storage.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
+
+from .observe import observed_metrics
 
 
 def dedup_latest(df: DataFrame, key: tuple[str, ...] | list[str],
@@ -63,7 +73,14 @@ def merge_dataframes(target: DataFrame, source: DataFrame,
     migration. Default off: silent schema drift on a parity table should
     fail loudly (conform() is the sanctioned drift gate).
     """
-    src = dedup_latest(source, key, order_col)
+    return _merge_deduped(target, dedup_latest(source, key, order_col), key,
+                          evolve_schema)
+
+
+def _merge_deduped(target: DataFrame, src: DataFrame,
+                   key: tuple[str, ...] | list[str],
+                   evolve_schema: bool = False) -> DataFrame:
+    """:func:`merge_dataframes` of a source already deduped on ``key``."""
     if evolve_schema:
         tgt_cols = set(target.columns)
         src_cols = set(src.columns)
@@ -75,6 +92,27 @@ def merge_dataframes(target: DataFrame, source: DataFrame,
                 src = src.withColumn(f.name, F.lit(None).cast(f.dataType))
     kept = target.join(src.select(*key), on=list(key), how="left_anti")
     return kept.unionByName(src.select(*target.columns))
+
+
+def _cut_batch(source: DataFrame, key: tuple[str, ...] | list[str],
+               order_col: str | None,
+               partition_col: str | None = None) -> tuple[DataFrame, dict]:
+    """Dedup ``source`` and cut it eagerly: the one pass over the batch.
+
+    Returns the cut and its metrics: ``n`` deduped rows and, given
+    ``partition_col``, ``parts``, the set of its non-null values, and
+    ``has_null``, whether it holds a NULL; ``{}`` for a batch that is
+    provably empty.
+    """
+    metrics = [F.count(F.lit(1)).alias("n")]
+    if partition_col:
+        metrics += [F.collect_set(partition_col).alias("parts"),
+                    F.max(F.col(partition_col).isNull()).alias("has_null")]
+    obs = Observation()
+    # local in every barrier mode: a storage cut would write the batch twice
+    cut = (dedup_latest(source, key, order_col).observe(obs, *metrics)
+           .localCheckpoint(eager=True))
+    return cut, observed_metrics(obs)
 
 
 def recover_swap(path: str) -> None:
@@ -109,34 +147,34 @@ def recover_swap(path: str) -> None:
 def upsert_parquet(spark, source: DataFrame, path: str,
                    key: tuple[str, ...] | list[str],
                    order_col: str | None = None,
-                   prechecked: bool = False,
                    evolve_schema: bool = False) -> None:
     """Idempotent upsert of ``source`` into the parquet table at ``path``.
 
     Running the same batch twice converges to the same table (pinned by
-    tests/test_upsert.py). Write goes through a staging suffix then swap,
-    because Spark cannot overwrite a path it is concurrently reading.
+    tests/test_conform_upsert.py). One pass over the batch: dedup, one eager
+    local cut that also fires the Observations on ``source`` and reads
+    the deduped row count, merge of the cut with the table, write.
+    Observations a caller attached to ``source`` are therefore complete
+    when this returns, empty batch included, at no extra job.
 
-    Empty batches return without touching the table (the reference's
-    empty-input short-circuit, run-et-etl.py:54-60 / Load.py:84-86) —
-    without this, a no-op merge would rewrite the entire target.
-    Callers that carry an ``Observation`` on ``source`` must do that
-    emptiness check themselves on the UN-observed frame and pass
-    ``prechecked=True`` — otherwise the limited ``take(1)`` scan is the
-    observation's first action and the metrics report n_rows=1.
+    Empty batches return after the cut without touching the table (the
+    reference's empty-input short-circuit, run-et-etl.py:54-60 /
+    Load.py:84-86) — without this, a no-op merge would rewrite the entire
+    target. The write goes through a staging suffix then swap, because
+    Spark cannot overwrite a path it is concurrently reading.
     """
     import os
     import shutil
 
     recover_swap(path)
-    if not prechecked and not source.take(1):
+    src, got = _cut_batch(source, key, order_col)
+    if not got.get("n"):
         return
     if os.path.exists(path):
-        target = spark.read.parquet(path)
-        merged = merge_dataframes(target, source, key, order_col,
-                                  evolve_schema=evolve_schema)
+        merged = _merge_deduped(spark.read.parquet(path), src, key,
+                                evolve_schema=evolve_schema)
     else:
-        merged = dedup_latest(source, key, order_col)
+        merged = src
     staging = path.rstrip("/") + "._staging"
     merged.write.mode("overwrite").parquet(staging)
     if os.path.exists(path):
@@ -163,41 +201,42 @@ def upsert_parquet_partitioned(spark, source: DataFrame, path: str,
     pruning, and the difference between rewriting 100 TB and rewriting one
     day of it.
 
-    1. distinct partition values of the (deduped) batch — a tiny driver
-       list (dates), this is metadata, not data collection;
+    1. dedup and cut the batch once, as :func:`upsert_parquet` does; the
+       cut's Observation also collects the batch's partition values — a
+       tiny set (dates), metadata rather than data — so an empty batch
+       touches nothing, a missing table included;
     2. read the target pruned to those partitions (directory-level
        pruning via the partition column filter);
-    3. merge and dynamically overwrite just those partition dirs
-       (``partitionOverwriteMode=dynamic``); all other partitions are
-       untouched bytes on disk.
+    3. merge and dynamically overwrite just those partition dirs (the
+       write's own ``partitionOverwriteMode=dynamic`` option, so the
+       session conf never changes); all other partitions are untouched
+       bytes on disk.
 
-    Returns the touched partition values.
+    Returns the touched partition values, sorted, NULL last.
     """
     import os
 
-    src = dedup_latest(source, key, order_col)
+    src, got = _cut_batch(source, key, order_col, partition_col)
+    if not got.get("n"):    # empty batch: touch nothing
+        return []
+    parts = sorted(got["parts"]) + [None] * got["has_null"]
     if not os.path.exists(path):
         src.write.partitionBy(partition_col).mode("overwrite").parquet(path)
-        return [r[0] for r in src.select(partition_col).distinct().collect()]
+        return parts
 
-    parts = [r[0] for r in src.select(partition_col).distinct().collect()]
-    if not parts:       # empty batch: touch nothing
-        return []
-    target = (spark.read.parquet(path)
-              .filter(F.col(partition_col).isin(parts)))
-    merged = merge_dataframes(target, src.select(*target.columns), key,
-                              order_col)
+    # isin never matches NULL: the NULL partition is selected on its own
+    touched = F.col(partition_col).isin(got["parts"])
+    if got["has_null"]:
+        touched = touched | F.col(partition_col).isNull()
+    target = spark.read.parquet(path).filter(touched)
+    merged = _merge_deduped(target, src.select(*target.columns), key)
     # break lineage off the target path before overwriting it (Spark
     # refuses to overwrite a path it is reading); localCheckpoint
     # materializes the merged partitions — which are small by construction
     # local in every barrier mode: a storage cut would write them twice
     merged = merged.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.partitionBy(partition_col).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (merged.write.option("partitionOverwriteMode", "dynamic")
+     .partitionBy(partition_col).mode("overwrite").parquet(path))
     return parts
 
 

@@ -25,7 +25,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.filter_dsl import compile_filter
-from ..operators.observe import with_row_metrics
+from ..operators.observe import observed_metrics, with_row_metrics
 from ..operators.upsert import upsert_parquet, upsert_parquet_partitioned
 from ..schemas import TABLES
 from .transform import transform_all
@@ -58,27 +58,25 @@ def load_tables(spark: SparkSession, tables: dict[str, DataFrame],
     """MERGE-upsert each table by its registry unique key (Load.py:63-183
     equivalent — one set-based merge per table instead of per-row SQL).
 
-    Returns rows-synced per table, measured by Observation metrics that
-    ride the merge's own write action (the reference's progress counters,
-    settings.py:17 — with zero extra jobs)."""
+    Returns rows-synced per table: the batch's rows before the intra-batch
+    dedup, counted by an Observation that rides the upsert's one cut of
+    the batch (the reference's progress counters, settings.py:17 — with
+    zero extra jobs). An empty batch counts 0 and leaves its table as it
+    was."""
     counts: dict[str, int] = {}
     for name, df in tables.items():
         key = TABLES[name].unique_key
-        # emptiness check on the RAW frame, before attaching the
-        # Observation: a take(1) on the observed frame would be its first
-        # action and pin the metrics at n_rows=1 (round-1 ADVICE bug).
-        if not df.take(1):
-            counts[name] = 0
-            continue
+        # no emptiness probe here: the upsert's cut is the batch's first
+        # and only evaluation, so it fires the Observation with the exact
+        # count, 0 included, and the upsert skips an empty batch itself
         observed, obs = with_row_metrics(df, f"sync_{name}")
         path = os.path.join(warehouse, name)
         if name in PARTITIONED_FACTS:
             upsert_parquet_partitioned(spark, observed, path, list(key),
                                        PARTITIONED_FACTS[name], order_col)
         else:
-            upsert_parquet(spark, observed, path, list(key), order_col,
-                           prechecked=True)
-        counts[name] = obs.get["n_rows"]
+            upsert_parquet(spark, observed, path, list(key), order_col)
+        counts[name] = observed_metrics(obs).get("n_rows", 0)
     return counts
 
 
@@ -155,12 +153,11 @@ def sync_incremental(spark: SparkSession, raw: dict[str, DataFrame],
     if wm is not None:
         updated_cat_ids = _updated_category_ids(raw["categories"], wm)
         if updated_cat_ids:
-            # sessions in updated categories: semi-join via exploded bridge
-            cat_filter = f"categories,{','.join(updated_cat_ids)}|or"
+            # sessions in updated categories; the DSL form of this
+            # predicate is f"categories,{','.join(updated_cat_ids)}|or"
             raw_sessions = raw["sessions"].filter(F.exists(
                 "categories",
                 lambda c: c["id"].isin([int(i) for i in updated_cat_ids])))
             sync_period(spark, {**raw, "sessions": raw_sessions},
                         warehouse, start, stop)
-            _ = cat_filter  # DSL form documented; predicate applied above
     write_watermark(spark, warehouse, stop_dt)

@@ -92,8 +92,7 @@ def incremental_sync_stream(spark: SparkSession, source_dir: str,
     events = read_event_stream(spark, source_dir)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # an empty micro-batch leaves the target as it is (upsert_parquet)
         upsert_parquet(batch_df.sparkSession, batch_df, target_path,
                        list(key), order_col="ts")
 

@@ -203,9 +203,59 @@ def test_empty_batch_short_circuit(spark, tmp_path):
     assert {f: os.path.getmtime(f) for f in glob.glob(f"{flat}/*.parquet")} == files
 
     part = os.path.join(str(tmp_path), "part")
+    assert upsert_parquet_partitioned(spark, empty, part, ["id"], "day") == []
+    assert not os.path.exists(part)       # a missing table stays missing
     upsert_parquet_partitioned(spark, df, part, ["id"], "day")
     assert upsert_parquet_partitioned(spark, empty, part, ["id"], "day") == []
     assert spark.read.parquet(part).count() == 1
+
+
+def test_partitioned_upsert_keeps_null_partition_rows(spark, tmp_path):
+    """A batch that touches the NULL partition merges with its rows instead
+    of overwriting them, and reports None among the touched values."""
+    from etl_ender_turing_spark.operators.upsert import upsert_parquet_partitioned
+
+    path = os.path.join(str(tmp_path), "fact")
+    schema = "id int, region string, v string"
+    first = spark.createDataFrame([(1, None, "a"), (2, "eu", "b")],
+                                  schema)
+    assert upsert_parquet_partitioned(spark, first, path, ["id"], "region") \
+        == ["eu", None]
+    batch = spark.createDataFrame([(3, None, "c")], schema)
+    assert upsert_parquet_partitioned(spark, batch, path, ["id"], "region") \
+        == [None]
+    got = {(r.id, r.region, r.v) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, None, "a"), (2, "eu", "b"), (3, None, "c")}
+
+
+def test_partitioned_upsert_leaves_session_conf_alone(spark, tmp_path,
+                                                       monkeypatch):
+    """Dynamic partition overwrite is an option of the one write, never a
+    session conf flip that concurrent writers in the session could see."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from etl_ender_turing_spark.operators.upsert import upsert_parquet_partitioned
+
+    path = os.path.join(str(tmp_path), "fact")
+    df = spark.createDataFrame(
+        [(1, "2024-06-01", "a"), (2, "2024-06-02", "b")],
+        "id int, day string, v string")
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    upsert_parquet_partitioned(spark, df, path, ["id"], "day")
+    batch = spark.createDataFrame([(2, "2024-06-02", "B")],
+                                  "id int, day string, v string")
+    assert upsert_parquet_partitioned(spark, batch, path, ["id"], "day") \
+        == ["2024-06-02"]
+    assert calls == []
+    got = {r.id: r.v for r in spark.read.parquet(path).collect()}
+    assert got == {1: "a", 2: "B"}
 
 
 def test_upsert_schema_evolution(spark, tmp_path):

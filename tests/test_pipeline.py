@@ -15,9 +15,10 @@ from pyspark.sql.types import MapType
 
 from etl_ender_turing_spark.pipeline import raw_fixture_tables, transform_all
 from etl_ender_turing_spark.pipeline.sync import (
-    read_watermark, sync_incremental, sync_period, write_watermark,
+    load_tables, read_watermark, sync_incremental, sync_period,
+    write_watermark,
 )
-from etl_ender_turing_spark.schemas import TABLES
+from etl_ender_turing_spark.schemas import TABLES, schema_of
 
 
 @pytest.fixture(scope="module")
@@ -159,12 +160,19 @@ def test_sync_period_and_idempotency(spark, raw, tmp_path):
     assert spark.read.parquet(os.path.join(wh, "sessions")).count() == sessions_n
 
 
-def test_sync_counts_match_loaded_rows(spark, raw, tmp_path):
+@pytest.fixture(scope="module")
+def full_sync(spark, raw, tmp_path_factory):
+    """Days 1-3 synced into a fresh warehouse, shared read-only by the
+    tests below: (warehouse path, rows synced per table)."""
+    wh = str(tmp_path_factory.mktemp("full"))
+    return wh, sync_period(spark, raw, wh, "2024-06-01", "2024-06-03")
+
+
+def test_sync_counts_match_loaded_rows(spark, full_sync):
     """Round-1 ADVICE bug: for non-partitioned tables the reported sync
     count came from the empty-check's take(1) scan (always 1). Counts must
     equal the rows actually loaded into a fresh warehouse."""
-    wh = str(tmp_path / "whcounts")
-    counts = sync_period(spark, raw, wh, "2024-06-01", "2024-06-03")
+    wh, counts = full_sync
     multi = 0
     for t, n in counts.items():
         loaded = spark.read.parquet(os.path.join(wh, t)).count()
@@ -173,10 +181,9 @@ def test_sync_counts_match_loaded_rows(spark, raw, tmp_path):
     assert multi >= 5   # the bug pinned every non-partitioned count at 1
 
 
-def test_incremental_converges_to_full(spark, raw, tmp_path):
-    wh_full = str(tmp_path / "full")
+def test_incremental_converges_to_full(spark, raw, full_sync, tmp_path):
+    wh_full = full_sync[0]
     wh_inc = str(tmp_path / "inc")
-    sync_period(spark, raw, wh_full, "2024-06-01", "2024-06-03")
 
     # incremental: day 1-2 first, then watermark-driven catch-up through day 3
     sync_period(spark, raw, wh_inc, "2024-06-01", "2024-06-02")
@@ -200,6 +207,84 @@ def test_incremental_converges_to_full(spark, raw, tmp_path):
 
     wm = read_watermark(spark, wh_inc)
     assert wm == datetime(2024, 6, 3)
+
+
+# a flat table and the date-partitioned fact, with the column each batch
+# varies (the key is "id" for both)
+LOAD_TABLES = [("labels", "text"), ("sessions", "type")]
+
+
+def _batch(spark, table, col, rows):
+    """A ``table`` batch of (id, ``col`` value, start_date) rows, every
+    other column NULL."""
+    schema = schema_of(table)
+    out = []
+    for i, v, day in rows:
+        row = dict.fromkeys(schema.fieldNames())
+        row.update({"id": i if table != "sessions" else str(i), col: v})
+        if table == "sessions":
+            row["start_date"] = day
+        out.append(tuple(row[c] for c in schema.fieldNames()))
+    return spark.createDataFrame(out, schema)
+
+
+def _files(path):
+    return {os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _, names in os.walk(path) for f in names}
+
+
+@pytest.mark.parametrize("table,col", LOAD_TABLES)
+def test_load_tables_evaluates_each_batch_row_once(spark, tmp_path, table, col):
+    """One pass per batch: emptiness, touched partitions, the merge and
+    the write all read one cut, so a batch row is computed once per
+    load_tables call, on a missing table and on an existing one."""
+    wh = str(tmp_path / "wh")
+    rows = [(1, "a", "2024-06-01"), (2, "b", "2024-06-01"),
+            (3, "c", "2024-06-02")]
+    for attempt in range(2):
+        acc = spark.sparkContext.accumulator(0)
+
+        def tick(v):
+            acc.add(1)
+            return v
+
+        batch = _batch(spark, table, col, rows)
+        counted = batch.withColumn(col, F.udf(tick, "string")(col))
+        assert load_tables(spark, {table: counted}, wh) == {table: 3}
+        assert acc.value == 3, (attempt, acc.value)
+    assert spark.read.parquet(os.path.join(wh, table)).count() == 3
+
+
+@pytest.mark.parametrize("table,col", LOAD_TABLES)
+def test_load_tables_empty_batch_touches_nothing(spark, tmp_path, table, col):
+    """An empty batch syncs 0 rows, creates no missing table and leaves an
+    existing one byte-identical."""
+    wh = str(tmp_path / "wh")
+    path = os.path.join(wh, table)
+    empty = _batch(spark, table, col, []).filter(F.lit(False))
+    assert load_tables(spark, {table: empty}, wh) == {table: 0}
+    assert not os.path.exists(path)
+
+    load_tables(spark, {table: _batch(spark, table, col,
+                                      [(1, "a", "2024-06-01")])}, wh)
+    before = _files(path)
+    assert before
+    assert load_tables(spark, {table: empty}, wh) == {table: 0}
+    assert _files(path) == before
+
+
+@pytest.mark.parametrize("table,col", LOAD_TABLES)
+def test_load_tables_counts_rows_before_dedup(spark, tmp_path, table, col):
+    """Rows synced means batch rows as received: a duplicated key counts
+    twice, while the table keeps one row per key."""
+    wh = str(tmp_path / "wh")
+    batch = _batch(spark, table, col, [(1, "a", "2024-06-01"),
+                                       (1, "b", "2024-06-01"),
+                                       (2, "c", "2024-06-02")])
+    assert load_tables(spark, {table: batch}, wh) == {table: 3}
+    loaded = spark.read.parquet(os.path.join(wh, table))
+    assert loaded.count() == 2
+    assert loaded.select("id").distinct().count() == 2
 
 
 def test_updated_category_pull_is_dim_bounded(spark):

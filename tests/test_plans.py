@@ -27,14 +27,30 @@ def plan_of(df) -> str:
 
 
 @pytest.fixture(scope="module")
-def plans(spark):
+def built(spark):
+    # Every catalog frame, built once for the module's gates: a build runs
+    # the builder's eager cuts, the bulk of a gate's time.
     # Failure-isolated: a builder that raises must fail ITS OWN gate
     # (test_all_builders_build), not ERROR every plan gate in the module —
     # one broken query must never disable the scale guards on the other 60.
-    out: dict[str, str | Exception] = {}
+    out: dict[str, object] = {}
     for name, spec in CATALOG.items():
         try:
-            out[name] = plan_of(spec.builder(spark, SF))
+            out[name] = spec.builder(spark, SF)
+        except Exception as exc:  # noqa: BLE001 — recorded, asserted below
+            out[name] = exc
+    return out
+
+
+@pytest.fixture(scope="module")
+def plans(built):
+    out: dict[str, str | Exception] = {}
+    for name, df in built.items():
+        if isinstance(df, Exception):
+            out[name] = df
+            continue
+        try:
+            out[name] = plan_of(df)
         except Exception as exc:  # noqa: BLE001 — recorded, asserted below
             out[name] = exc
     return out
@@ -301,7 +317,7 @@ def test_topk_per_group_window_consumes_pruned_input(spark):
         "WindowGroupLimit", 1)[1].splitlines()[0], below[:600]
 
 
-def test_driver_canon_contract(spark):
+def test_driver_canon_contract(built):
     """Every oracled query must survive the driver's pandas canonicalizer:
     (1) Spark output schema has no bare array/map/struct columns (pandas
     cannot sort/hash list cells — r3's q_embed_quantize ERR), and
@@ -322,7 +338,11 @@ def test_driver_canon_contract(spark):
     for name, spec in CATALOG.items():
         if spec.oracle is None:
             continue
-        schema = spec.builder(spark, SF).schema
+        df = built[name]
+        if isinstance(df, Exception):
+            bad.append(f"{name}: builder raised {df!r}")
+            continue
+        schema = df.schema
         for f in schema.fields:
             if isinstance(f.dataType, (ArrayType, MapType, StructType)):
                 bad.append(f"{name}: spark col '{f.name}' is "

@@ -13,11 +13,22 @@ These exercise every edge the transform must survive:
 - users without id=0 (default-user injection, Transform.py:117-127),
 - agents moving between groups (as-of association),
 - caller_prev_session_id chains.
+
+``raw_fixture_tables`` is the pipeline's Extract. The reference's
+Extract writes its pull once for Transform to read (ETL/Extract.py,
+ETL/Transform.py:55-297); here each entity's rows cross into the JVM
+once, as one Arrow table, because each transform branch, semi-join key
+side and sync pass scans them. A ``createDataFrame`` over a Python list
+would be a parallelized Python RDD, so every job scanning it would run
+its tasks through Python workers.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def _guid(i: int) -> str:
@@ -337,6 +348,13 @@ _GENERATORS = {
 
 
 def raw_fixture_tables(spark: SparkSession) -> dict[str, DataFrame]:
-    """All raw entity DataFrames with explicit schemas (never inferred)."""
-    return {name: spark.createDataFrame(gen(), _DDL[name])
-            for name, gen in _GENERATORS.items()}
+    """All raw entity DataFrames with explicit schemas (never inferred).
+    Same schemas and rows as ``spark.createDataFrame(gen(), _DDL[name])``,
+    but the rows reach the JVM once, as an Arrow table, so no job over
+    them runs a Python worker."""
+    out = {}
+    for name, gen in _GENERATORS.items():
+        schema = DataType.fromDDL(_DDL[name])
+        rows = pa.Table.from_pylist(gen(), schema=to_arrow_schema(schema))
+        out[name] = spark.createDataFrame(rows, schema)
+    return out

@@ -85,13 +85,13 @@ def transform_base_dicts(raw: dict[str, DataFrame],
 
     users = _parse_ts(raw["users"], ["invite_expires"])
     users_conf = conform(users, schema_of("users"), "users")
+    # built from JVM literals (conform casts them to the registry types):
+    # a createDataFrame row would put a Python worker task into every job
+    # that reads users
     default = conform(
-        _parse_ts(
-            spark.createDataFrame([DEFAULT_USER],
-                                  "id long, full_name string, email string,"
-                                  " is_active boolean, is_superuser boolean,"
-                                  " invite_expires string"),
-            ["invite_expires"]),
+        _parse_ts(spark.range(1).select(*[F.lit(v).alias(k)
+                                          for k, v in DEFAULT_USER.items()]),
+                  ["invite_expires"]),
         schema_of("users"), "users(default)")
     # anti-join guard: inject only when id=0 absent (Transform.py:117-127)
     inject = default.join(users_conf.select("id"), "id", "left_anti")

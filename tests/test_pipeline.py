@@ -90,6 +90,42 @@ def test_default_user_injected_once(spark, raw, tables):
     assert again["users"].filter("id = 0").count() == 1
 
 
+def _has_python_rdd(df):
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_raw_frames_are_jvm_resident(raw):
+    """The extract crosses into the JVM once: no raw frame's lineage
+    holds a Python RDD (a createDataFrame over a Python list), so no
+    later job over it runs a Python worker."""
+    assert [n for n, df in raw.items() if _has_python_rdd(df)] == []
+
+
+def _json_rows(df):
+    # maps (sessions.duration_details) rule out exceptAll; JSON strings
+    # compare every field, nested ones included
+    return sorted(r[0] for r in df.select(F.to_json(F.struct("*"))).collect())
+
+
+def test_raw_frames_match_fresh_create(spark, raw):
+    """The Arrow route changes how the raw rows reach the JVM, not what
+    they are: each frame keeps the declared schema and rows of a fresh
+    createDataFrame over the generator's list."""
+    from etl_ender_turing_spark.pipeline.fixtures import _DDL, _GENERATORS
+
+    assert list(raw) == list(_GENERATORS)
+    for name, gen in _GENERATORS.items():
+        fresh = spark.createDataFrame(gen(), _DDL[name])
+        assert raw[name].schema == fresh.schema, name
+        assert _json_rows(raw[name]) == _json_rows(fresh), name
+
+
+def test_transformed_users_are_jvm_resident(spark, raw):
+    """users reads the Arrow-backed raw frame and a default row built
+    from JVM literals: no Python worker in any job that loads it."""
+    assert not _has_python_rdd(transform_all(raw, spark)["users"])
+
+
 def test_transcript_metrics_match_declared_session_columns(spark, raw, tables):
     """Recomputing words_count_*/silence/duration from fixture utterances
     reproduces the sessions table's declared values exactly — the

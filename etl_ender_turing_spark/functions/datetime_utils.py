@@ -15,53 +15,80 @@ with pinned, test-documented semantics:
   (Transform.py:245-250).
 
 All branches are built-in expressions -> whole-stage codegen, pushdown-safe.
+
+Each helper has one definition, as SQL text over an argument that is
+itself SQL text (``*_sql``): the pipeline splices it into its one-call
+projections (see ``functions/sql_text.py`` for why). The Column helpers
+take a column name and are ``F.expr`` of that same text. String
+literals hold no backslash and doubles carry a ``D`` suffix, so the text
+parses alike under ``spark.sql.parser.escapedStringLiterals``,
+``spark.sql.legacy.exponentLiteralAsDecimal.enabled`` and ANSI mode.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-ISO_CORE = r"(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})"
+from .sql_text import ident, string_literal
+
+# [0-9], not \d (the same class in Java regex): a literal without a
+# backslash parses alike under spark.sql.parser.escapedStringLiterals
+ISO_CORE = "([0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2})"
 DEFAULT_TS = "1900-01-01 00:00:00"
 # Spark happily parses year 0001; pandas Timestamp cannot (min 1677-09-21).
 # Mirror pandas: anything below the pandas min becomes the 1900 default.
 PANDAS_MIN_TS = "1677-09-22 00:00:00"
 
 
-def parse_iso_ts(col: Column | str) -> Column:
-    """Lenient ISO-8601 parse: direct try_to_timestamp, then regex salvage."""
-    c = F.col(col) if isinstance(col, str) else col
-    direct = F.try_to_timestamp(c)
-    salvaged = F.try_to_timestamp(F.regexp_extract(c, ISO_CORE, 1))
-    return F.coalesce(direct, salvaged)
+def parse_iso_ts_sql(c: str) -> str:
+    """Lenient ISO-8601 parse of SQL text ``c``: direct try_to_timestamp,
+    then regex salvage."""
+    return (f"coalesce(try_to_timestamp({c}), try_to_timestamp("
+            f"regexp_extract({c}, {string_literal(ISO_CORE)}, 1)))")
 
 
-def round_to_second(ts: Column) -> Column:
+def round_to_second_sql(ts: str) -> str:
     """Round (not truncate) a timestamp to whole seconds, like pandas
     ``.dt.round('s')`` (half-up rather than pandas' half-even; pinned in
     tests/test_datetime_utils.py)."""
-    return F.timestamp_seconds(F.round(F.unix_micros(ts) / F.lit(1_000_000.0)))
+    return f"timestamp_seconds(round(unix_micros({ts}) / 1e6D))"
 
 
-def safe_to_timestamp(col: Column | str, default: str = DEFAULT_TS) -> Column:
+def safe_to_timestamp_sql(c: str, default: str = DEFAULT_TS) -> str:
     """Parse → round to second → clamp out-of-pandas-range to ``default``.
 
     Equivalent of reference safe_to_datetime (utils.py:197-205) applied
     after to_datetime+round (Transform.py:131-139).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    parsed = round_to_second(parse_iso_ts(c))
-    too_old = parsed < F.lit(PANDAS_MIN_TS).cast("timestamp")
-    fallback = F.lit(default).cast("timestamp")
-    return F.when(parsed.isNull() & c.isNotNull(), fallback) \
-            .when(too_old, fallback) \
-            .otherwise(parsed)
+    parsed = round_to_second_sql(parse_iso_ts_sql(c))
+    fallback = f"CAST({string_literal(default)} AS TIMESTAMP)"
+    return (f"CASE WHEN {parsed} IS NULL AND {c} IS NOT NULL THEN {fallback} "
+            f"WHEN {parsed} < CAST({string_literal(PANDAS_MIN_TS)} AS TIMESTAMP)"
+            f" THEN {fallback} ELSE {parsed} END")
 
 
-def split_date_time(ts: Column) -> tuple[Column, Column]:
+def split_date_time_sql(ts: str) -> tuple[str, str]:
     """ISO date part and HH:MM time part, as strings.
 
     Reference splits the raw ISO string on 'T' and slices HH:MM
     (Transform.py:39-40; get-scores.py:58).
     """
-    return F.date_format(ts, "yyyy-MM-dd"), F.date_format(ts, "HH:mm")
+    return (f"date_format({ts}, {string_literal('yyyy-MM-dd')})",
+            f"date_format({ts}, {string_literal('HH:mm')})")
+
+
+def parse_iso_ts(col: str) -> Column:
+    return F.expr(parse_iso_ts_sql(ident(col)))
+
+
+def round_to_second(col: str) -> Column:
+    return F.expr(round_to_second_sql(ident(col)))
+
+
+def safe_to_timestamp(col: str, default: str = DEFAULT_TS) -> Column:
+    return F.expr(safe_to_timestamp_sql(ident(col), default))
+
+
+def split_date_time(col: str) -> tuple[Column, Column]:
+    d, t = split_date_time_sql(ident(col))
+    return F.expr(d), F.expr(t)

@@ -17,13 +17,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .datetime_utils import split_date_time
+from .sql_text import ident, string_literal
 
 ET_LINK_PREFIX = "/main/conversations/view?session_id="
 
 
-def et_link(base_url: str, id_col: Column | str = "id") -> Column:
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return F.concat(F.lit(base_url.rstrip("/") + ET_LINK_PREFIX), c)
+def et_link_sql(base_url: str, id_sql: str) -> str:
+    """et_link over SQL text ``id_sql``: the one definition."""
+    prefix = string_literal(base_url.rstrip("/") + ET_LINK_PREFIX)
+    return f"concat({prefix}, {id_sql})"
+
+
+def et_link(base_url: str, id_col: str = "id") -> Column:
+    return F.expr(et_link_sql(base_url, ident(id_col)))
 
 
 def with_enrichment_columns(sessions: DataFrame, agents: DataFrame,
@@ -33,10 +39,9 @@ def with_enrichment_columns(sessions: DataFrame, agents: DataFrame,
                                   F.col("name").alias("agent_name")))
     g = F.broadcast(groups.select(F.col("id").alias("group_id"),
                                   F.col("name").alias("group_name")))
-    d, t = split_date_time(F.col("start_dt"))
+    d, t = split_date_time("start_dt")
     return (sessions
             .join(a, "agent_id", "left")
             .join(g, "group_id", "left")
-            .withColumn("start_date", d)
-            .withColumn("start_time", t)
-            .withColumn("et_link", et_link(base_url)))
+            .withColumns({"start_date": d, "start_time": t,
+                          "et_link": et_link(base_url)}))

@@ -23,13 +23,24 @@ This module expresses that once, declaratively. Semantics pinned to match
 Scale note: explode is narrow (no shuffle) — each input partition explodes
 independently, so this layer costs zero exchanges at any scale; column
 pruning through explode is handled by Catalyst (NestedColumnAliasing).
+
+Every projection here is SQL text with quoted names, one ``selectExpr``
+call each: the explode with its child-field promotion (one ``inline``
+generator; ``posexplode`` and a second projection when the ordinal is
+kept) and the ``keep`` projection. A Column object per carried key and
+child field cost ~40 Py4J round trips apiece, which made plan building,
+not execution, the bulk of a daily sync's transform. Names are taken
+literally: a dot in a column or field name is part of the name, never a
+nested-field path.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from ..functions.sql_text import ident
 
 
 @dataclass(frozen=True)
@@ -49,23 +60,25 @@ def flatten(df: DataFrame, spec: FlattenSpec) -> DataFrame:
     ``position_col`` keeps the element's array ordinal (posexplode) — the
     synthetic within-parent key for child rows with no natural id, e.g.
     transcript utterances."""
-    parents = [F.col(src).alias(dst) for src, dst in spec.parent_keys.items()]
+    parents = [f"{ident(src)} AS {ident(dst)}"
+               for src, dst in spec.parent_keys.items()]
+    arr = ident(spec.array_col)
+    fields = df.schema[spec.array_col].dataType.elementType.fieldNames()
+    names = [spec.child_renames.get(f, spec.child_prefix + f) for f in fields]
     if spec.position_col:
-        exploded = df.select(
-            *parents,
-            F.posexplode(spec.array_col).alias(spec.position_col, "_c"))
+        # no positional inline: posexplode, then promote the fields
+        exploded = df.selectExpr(
+            *parents, f"posexplode({arr}) AS ({ident(spec.position_col)}, `_c`)")
+        out = exploded.selectExpr(
+            *map(ident, [*spec.parent_keys.values(), spec.position_col]),
+            *[f"`_c`.{ident(f)} AS {ident(n)}" for f, n in zip(fields, names)])
     else:
-        exploded = df.select(*parents, F.explode(spec.array_col).alias("_c"))
-    child_fields = exploded.schema["_c"].dataType.fieldNames()
-    children = []
-    for name in child_fields:
-        out = spec.child_renames.get(name, spec.child_prefix + name)
-        children.append(F.col(f"_c.{name}").alias(out))
-    pos = [F.col(spec.position_col)] if spec.position_col else []
-    out = exploded.select(*[F.col(v) for v in spec.parent_keys.values()],
-                          *pos, *children)
+        # inline = explode + field promotion in one generator; a NULL
+        # element still yields one all-NULL row, as explode + `_c`.f does
+        out = df.selectExpr(
+            *parents, f"inline({arr}) AS ({', '.join(map(ident, names))})")
     if spec.keep:
-        out = out.select(*spec.keep)
+        out = out.selectExpr(*map(ident, spec.keep))
     return out
 
 

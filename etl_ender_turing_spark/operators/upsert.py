@@ -37,27 +37,33 @@ cut holds one deduped batch (a day of a fact) in executor storage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
+from ..functions.sql_text import ident, type_sql
 from .observe import observed_metrics
 
 
 def dedup_latest(df: DataFrame, key: tuple[str, ...] | list[str],
                  order_col: str | None = None) -> DataFrame:
     """Keep one row per unique key — the most recent when ``order_col`` is
-    given, otherwise an arbitrary-but-deterministic single row."""
+    given, otherwise an arbitrary-but-deterministic single row.
+
+    One SQL-text projection: the window is one string, not a Column
+    object per key and per row column (the MERGE path builds it per
+    batch)."""
     if order_col:
-        order = F.col(order_col).desc_nulls_last()
+        order = f"{ident(order_col)} DESC NULLS LAST"
     else:
         # content-derived tie-break: monotonically_increasing_id depends on
         # partition layout, so replays on a different cluster size could
         # keep a different row. Hashing the serialized row is stable under
         # any repartitioning (to_json handles map/array/binary columns that
         # xxhash64 and struct-ordering cannot).
-        order = F.md5(F.to_json(F.struct(*df.columns))).desc()
-    w = Window.partitionBy(*key).orderBy(order)
-    return (df.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") == 1).drop("_rn"))
+        order = "md5(to_json(struct(*))) DESC"
+    partition = ", ".join(map(ident, key))
+    return (df.selectExpr("*", f"row_number() OVER (PARTITION BY {partition} "
+                               f"ORDER BY {order}) AS `_rn`")
+              .filter("`_rn` = 1").drop("_rn"))
 
 
 def merge_dataframes(target: DataFrame, source: DataFrame,
@@ -84,14 +90,21 @@ def _merge_deduped(target: DataFrame, src: DataFrame,
     if evolve_schema:
         tgt_cols = set(target.columns)
         src_cols = set(src.columns)
-        for f in src.schema.fields:
-            if f.name not in tgt_cols:
-                target = target.withColumn(f.name, F.lit(None).cast(f.dataType))
-        for f in target.schema.fields:
-            if f.name not in src_cols:
-                src = src.withColumn(f.name, F.lit(None).cast(f.dataType))
-    kept = target.join(src.select(*key), on=list(key), how="left_anti")
-    return kept.unionByName(src.select(*target.columns))
+        target = _with_nulls(target, [f for f in src.schema.fields
+                                      if f.name not in tgt_cols])
+        src = _with_nulls(src, [f for f in target.schema.fields
+                                if f.name not in src_cols])
+    kept = target.join(src.selectExpr(*map(ident, key)), on=list(key),
+                       how="left_anti")
+    return kept.unionByName(src.selectExpr(*map(ident, target.columns)))
+
+
+def _with_nulls(df: DataFrame, fields: list) -> DataFrame:
+    """``df`` plus a typed NULL column per field, in one projection."""
+    if not fields:
+        return df
+    return df.selectExpr("*", *[f"CAST(NULL AS {type_sql(f.dataType)}) AS "
+                                f"{ident(f.name)}" for f in fields])
 
 
 def _cut_batch(source: DataFrame, key: tuple[str, ...] | list[str],
@@ -104,13 +117,15 @@ def _cut_batch(source: DataFrame, key: tuple[str, ...] | list[str],
     ``has_null``, whether it holds a NULL; ``{}`` for a batch that is
     provably empty.
     """
-    metrics = [F.count(F.lit(1)).alias("n")]
+    metrics = ["count(1) AS n"]
     if partition_col:
-        metrics += [F.collect_set(partition_col).alias("parts"),
-                    F.max(F.col(partition_col).isNull()).alias("has_null")]
+        p = ident(partition_col)
+        metrics += [f"collect_set({p}) AS parts",
+                    f"max({p} IS NULL) AS has_null"]
     obs = Observation()
     # local in every barrier mode: a storage cut would write the batch twice
-    cut = (dedup_latest(source, key, order_col).observe(obs, *metrics)
+    cut = (dedup_latest(source, key, order_col)
+           .observe(obs, *map(F.expr, metrics))
            .localCheckpoint(eager=True))
     return cut, observed_metrics(obs)
 
@@ -229,7 +244,8 @@ def upsert_parquet_partitioned(spark, source: DataFrame, path: str,
     if got["has_null"]:
         touched = touched | F.col(partition_col).isNull()
     target = spark.read.parquet(path).filter(touched)
-    merged = _merge_deduped(target, src.select(*target.columns), key)
+    merged = _merge_deduped(target, src.selectExpr(*map(ident, target.columns)),
+                            key)
     # break lineage off the target path before overwriting it (Spark
     # refuses to overwrite a path it is reading); localCheckpoint
     # materializes the merged partitions — which are small by construction

@@ -16,6 +16,9 @@ Defaults are chosen for correctness-stable, scale-ready behavior:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 from pyspark.sql import SparkSession
 
@@ -60,3 +63,29 @@ def get_spark(app_name: str = "etl-ender-turing-spark", master: str | None = Non
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def count_py4j_calls(spark: SparkSession) -> Iterator[SimpleNamespace]:
+    """Count the Py4J round trips made inside the block: every
+    ``send_command`` of the session's gateway client, from any thread.
+    Building a plan runs no Spark job, so this count (not a job count) is
+    what its driver-side cost scales with.
+
+        with count_py4j_calls(spark) as n:
+            build(...)
+        n.calls
+    """
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    counter = SimpleNamespace(calls=0)
+
+    def counting(*args, **kwargs):
+        counter.calls += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield counter
+    finally:
+        client.send_command = send

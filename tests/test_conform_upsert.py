@@ -32,6 +32,24 @@ def test_conform_is_projection_only_no_shuffle(spark):
     assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
 
 
+def test_conform_odd_names(spark):
+    """Column names with a backtick, a dot and a space are plain names:
+    kept, cast and NULL-filled like any other."""
+    odd = "o`d.d n"
+    df = spark.createDataFrame([(1, "x")], T.StructType([
+        T.StructField(f"{odd}.id", T.IntegerType()),
+        T.StructField(f"{odd}.junk", T.StringType())]))
+    nested = T.StructType([T.StructField(f"{odd}.x", T.LongType(), False)])
+    target = T.StructType([
+        T.StructField(f"{odd}.id", T.LongType()),
+        T.StructField(f"{odd}.missing", T.TimestampType()),
+        T.StructField(f"{odd}.nested", nested),
+        T.StructField(f"{odd}.map", T.MapType(T.StringType(), nested))])
+    out = conform(df, target, "odd")
+    assert out.schema == target
+    assert [tuple(r) for r in out.collect()] == [(1, None, None, None)]
+
+
 def test_dedup_latest_keeps_most_recent(spark):
     df = spark.createDataFrame(
         [(1, "old", "2024-01-01"), (1, "new", "2024-01-02"), (2, "x", "2024-01-01")],

@@ -75,3 +75,39 @@ def test_flatten_is_narrow_no_shuffle(spark):
         array_col="categories", parent_keys={"id": "session_id"}))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+# a backtick, a dot and a space in every name: each is a plain name, never
+# a nested-field path or a quoting error
+ODD = "o`d.d n"
+
+
+def _odd(spark):
+    from pyspark.sql import types as T
+    elem = T.StructType([T.StructField(f"{ODD}.f", T.LongType()),
+                         T.StructField("v", T.StringType())])
+    schema = T.StructType([T.StructField(f"{ODD}.id", T.StringType()),
+                           T.StructField(f"{ODD}.arr", T.ArrayType(elem))])
+    return spark.createDataFrame(
+        [("s1", [(1, "a"), None, (2, "b")]), ("s2", None)], schema)
+
+
+def test_flatten_odd_names(spark):
+    out = flatten(_odd(spark), FlattenSpec(
+        array_col=f"{ODD}.arr", parent_keys={f"{ODD}.id": f"{ODD}.sid"},
+        child_renames={f"{ODD}.f": f"{ODD}.fid"}, child_prefix="p`. ",
+        keep=(f"{ODD}.sid", f"{ODD}.fid", "p`. v")))
+    assert out.columns == [f"{ODD}.sid", f"{ODD}.fid", "p`. v"]
+    # a NULL element is one all-NULL child row, as explode gives
+    assert [tuple(r) for r in out.collect()] == [
+        ("s1", 1, "a"), ("s1", None, None), ("s1", 2, "b")]
+
+
+def test_posexplode_flatten_odd_names(spark):
+    out = flatten(_odd(spark), FlattenSpec(
+        array_col=f"{ODD}.arr", parent_keys={f"{ODD}.id": f"{ODD}.sid"},
+        position_col=f"{ODD}.pos"))
+    assert out.columns == [f"{ODD}.sid", f"{ODD}.pos", f"{ODD}.f", "v"]
+    assert [tuple(r) for r in out.orderBy(f"`{ODD.replace('`', '``')}.pos`")
+            .collect()] == [("s1", 0, 1, "a"), ("s1", 1, None, None),
+                            ("s1", 2, 2, "b")]

@@ -6,6 +6,8 @@ injection, drop-list absence, datetime edge handling, idempotent re-sync,
 incremental == full convergence.
 """
 
+import gc
+import hashlib
 import os
 from datetime import datetime
 
@@ -19,6 +21,7 @@ from etl_ender_turing_spark.pipeline.sync import (
     write_watermark,
 )
 from etl_ender_turing_spark.schemas import TABLES, schema_of
+from etl_ender_turing_spark.session import count_py4j_calls
 
 
 @pytest.fixture(scope="module")
@@ -124,6 +127,76 @@ def test_transformed_users_are_jvm_resident(spark, raw):
     """users reads the Arrow-backed raw frame and a default row built
     from JVM literals: no Python worker in any job that loads it."""
     assert not _has_python_rdd(transform_all(raw, spark)["users"])
+
+
+def test_transform_build_round_trip_budget(spark, raw):
+    """Building the transform plan runs no job; its driver cost is Py4J
+    round trips. Projections built as SQL text make ~0.5-1k per warm
+    build; one Column object per projected column made ~9.3k."""
+    transform_all(raw, spark)   # warm: raw schemas fetched, JVM classes loaded
+    gc.collect()                # drop earlier builds' JVM handles first
+    with count_py4j_calls(spark) as n:
+        transform_all(raw, spark)
+    assert n.calls <= 2500, n.calls
+
+
+def _digest(df):
+    """(rows, sha256 of the schema JSON, sha256 of the sorted to_json
+    rows), each hash cut to 16 hex digits."""
+    rows = _json_rows(df)
+    return (len(rows),
+            hashlib.sha256(df.schema.json().encode()).hexdigest()[:16],
+            hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16])
+
+
+# every transform_all table over the fixtures, as the per-column Column
+# projections built them; the SQL-text projections must reproduce them
+PINNED = {
+    "agent_group_associations": (26, "00c797c9d5492ac8", "d80a57f60bdc0317"),
+    "agents": (20, "46e56724dd89351e", "9338541894fdb299"),
+    "categories": (15, "c056e80d7371941b", "64f160795c70d466"),
+    "category_labels": (20, "a9a48eb128009123", "4b8aafaa41bdaf99"),
+    "groups": (5, "ce3ff8f8dccaadbe", "773b7c256810c7ae"),
+    "labels": (8, "64f9f3d8ff61f1d7", "5dc1ce397152dfd7"),
+    "scorecard_categories": (12, "9a1c08e99f9fa213", "ae94e4c94be933c2"),
+    "scorecard_points": (60, "d778a69b34b538ab", "2792a22b2c1eeb2b"),
+    "scorecards": (3, "2a9944765ad186a3", "b06e6cd92cb42de3"),
+    "sessions": (300, "e17032d01e8f3c81", "119481aa10572f2f"),
+    "sessions_categories": (240, "23acb2f8a84b981f", "330cf37685aeeed7"),
+    "sessions_comments": (50, "a68de8494e254dfa", "c6c548c7c96ee9bf"),
+    "sessions_crm_statuses": (258, "126b3233715bbe88", "353a2909d602fa49"),
+    "sessions_reviewers": (100, "015ec349eef2cdfd", "45753f6a9c719178"),
+    "sessions_scores": (411, "018e759dc791b8a6", "ce463fc89d00c0b1"),
+    "sessions_summaries": (150, "3c9c51500a3dc9f1", "9151325bde6e0cc9"),
+    "sessions_tags": (450, "970da6acd4c99a73", "21392b62d8b84eba"),
+    "sessions_transcripts": (1032, "7012c47ddbf96c96", "455a9ff20d34620b"),
+    "tag_labels": (23, "d700f00db0fad56c", "d02a9fb23896b310"),
+    "tags": (30, "1f8494c3673c8e87", "2529762b65ffd376"),
+    "users": (11, "2541fdd6a0941c70", "45684231da0b802b"),
+}
+
+# the tables that change when the raw sessions are cut to one day, as
+# the daily sync cuts them (2024-06-02)
+PINNED_DAILY = {
+    "sessions": (100, "e17032d01e8f3c81", "77b63495f37236f3"),
+    "sessions_categories": (80, "23acb2f8a84b981f", "947d52196651369f"),
+    "sessions_comments": (0, "a68de8494e254dfa", "e3b0c44298fc1c14"),
+    "sessions_crm_statuses": (86, "126b3233715bbe88", "e6e99b0a69bde399"),
+    "sessions_reviewers": (0, "015ec349eef2cdfd", "e3b0c44298fc1c14"),
+    "sessions_scores": (135, "018e759dc791b8a6", "4dafbd71bbe2403a"),
+    "sessions_summaries": (50, "3c9c51500a3dc9f1", "dcf548c338466bd1"),
+    "sessions_tags": (150, "970da6acd4c99a73", "b5630b62ba7aa9fb"),
+}
+
+
+def test_transform_outputs_pinned(spark, raw, tables):
+    """Every table keeps its exact schema (nullability included) and
+    rows, on the full fixture window and on the one-day cut."""
+    assert {n: _digest(df) for n, df in tables.items()} == PINNED
+    day = "2024-06-02"
+    daily = transform_all({**raw, "sessions": raw["sessions"].filter(
+        F.col("start_dt").substr(1, 10).between(day, day))}, spark)
+    assert {n: _digest(daily[n]) for n in PINNED_DAILY} == PINNED_DAILY
 
 
 def test_transcript_metrics_match_declared_session_columns(spark, raw, tables):

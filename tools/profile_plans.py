@@ -8,7 +8,10 @@ For each named catalog query: clears the shared cuts, times the noop
 sink N times (guide §1.4), records the floor, and writes the
 pre-execution ``explain("formatted")`` plus the AQE-final executed plan
 to ``<outdir>/<query>_<tag>.txt`` (e.g. ``plans/r13``, tag = before /
-after). Prints one JSON line per query so A/B runs diff cleanly.
+after). Prints one JSON line per query so A/B runs diff cleanly; besides
+the floor it carries the builder call's own cost, fastest of the N runs:
+``build_s`` (its wall time, eager cuts included) and ``py4j_calls`` (its
+Py4J round trips, the driver-side cost of building the plan).
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_ender_turing_spark.plans import CATALOG, llm_catalog
-from etl_ender_turing_spark.session import get_spark
+from etl_ender_turing_spark.session import count_py4j_calls, get_spark
 
 
 def main() -> None:
@@ -47,13 +50,16 @@ def main() -> None:
         if spec is None:
             print(json.dumps({"query": name, "err": "not in CATALOG"}))
             continue
-        samples = []
+        samples, builds, calls = [], [], []
         df = None
         for _ in range(args.runs):
             llm_catalog.clear_fixture_cache()
             spark.sparkContext.setJobDescription(f"profile {name}")
             t0 = time.perf_counter()
-            df = spec.builder(spark, sf_dir)
+            with count_py4j_calls(spark) as n:
+                df = spec.builder(spark, sf_dir)
+            builds.append(time.perf_counter() - t0)
+            calls.append(n.calls)
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
         spark.sparkContext.setJobDescription(None)
@@ -70,7 +76,9 @@ def main() -> None:
             f.write("\n\n== AQE-final executed plan (last sample) ==\n")
             f.write(executed)
         print(json.dumps({"query": name, "floor": min(samples),
-                          "samples": samples, "plan": path}))
+                          "samples": samples,
+                          "build_s": round(min(builds), 3),
+                          "py4j_calls": min(calls), "plan": path}))
     spark.stop()
 
 

@@ -11,10 +11,11 @@ line, sized well under that window; the full per-query detail (all
 timings, raw samples, drift regressions) goes to BENCH_detail_latest.json
 next to this file instead of stdout.
 
-Each query is materialized via a count-only action (``df.count()`` after a
-noop cache-free plan) so timing covers scan→shuffle→agg, not driver-side
-row serialization. First query absorbs JVM warmup; a warmup pass runs a
-trivial scan first so per-query numbers are comparable.
+Each query runs through ``plans.runner.run_query``: shared cuts cleared,
+the builder called, the full rows written to the noop sink. A warm-up
+pass reads the benched tables first so per-query numbers are comparable.
+``$SPARK_GRAFT_BENCH_EXTRA`` (comma-separated) adds queries; an unknown
+name raises ``KeyError``.
 
 Noise hardening: every query runs $SPARK_GRAFT_BENCH_RUNS times (default
 2) and reports its BEST time — a machine-contention spike (concurrent
@@ -30,11 +31,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from etl_ender_turing_spark.plans import CATALOG, llm_catalog
+from etl_ender_turing_spark.plans.runner import run_query, warm_up
 from etl_ender_turing_spark.session import get_spark
 
 # The 11 queries BASELINE.md's "Measured engine numbers" table records
@@ -239,33 +239,15 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmup: JVM + parquet footer caches for every benched table family
-    for t in ("lineitem", "documents", "embeddings"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
+    warm_up(spark, sf_dir)
 
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     extra = [n for n in os.environ.get("SPARK_GRAFT_BENCH_EXTRA", "").split(",") if n]
     for name in BENCH_QUERIES + extra:
-        spec = CATALOG.get(name)
-        if spec is None:
-            continue
-        samples = []
-        for _ in range(n_runs):
-            # timings measure the FULL plan, never a warm shared cut
-            # (barrier.shared_cut keeps dedup/edge/hash subtrees for the
-            # serial correctness pass — that's a different workload)
-            llm_catalog.clear_fixture_cache()
-            t0 = time.perf_counter()
-            # noop sink, NOT count(): count() lets Catalyst prune every
-            # column not needed for the row count, silently skipping
-            # expensive compute-only projections (the char-entropy fold
-            # was invisible to a count() bench); noop evaluates the full
-            # row and discards it
-            spec.builder(spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            samples.append(round(time.perf_counter() - t0, 3))
+        samples = [round(s.total_s, 3)
+                   for s in run_query(spark, sf_dir, name, runs=n_runs)]
         all_runs[name] = samples
         timings[name] = min(samples)
 

@@ -1,8 +1,2 @@
-from .datetime_utils import (  # noqa: F401
-    parse_iso_ts,
-    safe_to_timestamp,
-    round_to_second,
-    split_date_time,
-)
 from .filter_dsl import compile_filter, parse_filter  # noqa: F401
-from .derived import et_link, with_enrichment_columns  # noqa: F401
+from .derived import with_enrichment_columns  # noqa: F401

@@ -18,8 +18,8 @@ All branches are built-in expressions -> whole-stage codegen, pushdown-safe.
 
 Each helper has one definition, as SQL text over an argument that is
 itself SQL text (``*_sql``): the pipeline splices it into its one-call
-projections (see ``functions/sql_text.py`` for why). The Column helpers
-take a column name and are ``F.expr`` of that same text. String
+projections (see ``functions/sql_text.py`` for why); a Column is
+``F.expr`` of that text over ``ident(<column name>)``. String
 literals hold no backslash and doubles carry a ``D`` suffix, so the text
 parses alike under ``spark.sql.parser.escapedStringLiterals``,
 ``spark.sql.legacy.exponentLiteralAsDecimal.enabled`` and ANSI mode.
@@ -27,9 +27,7 @@ parses alike under ``spark.sql.parser.escapedStringLiterals``,
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
-
-from .sql_text import ident, string_literal
+from .sql_text import string_literal
 
 # [0-9], not \d (the same class in Java regex): a literal without a
 # backslash parses alike under spark.sql.parser.escapedStringLiterals
@@ -76,19 +74,3 @@ def split_date_time_sql(ts: str) -> tuple[str, str]:
     return (f"date_format({ts}, {string_literal('yyyy-MM-dd')})",
             f"date_format({ts}, {string_literal('HH:mm')})")
 
-
-def parse_iso_ts(col: str) -> Column:
-    return F.expr(parse_iso_ts_sql(ident(col)))
-
-
-def round_to_second(col: str) -> Column:
-    return F.expr(round_to_second_sql(ident(col)))
-
-
-def safe_to_timestamp(col: str, default: str = DEFAULT_TS) -> Column:
-    return F.expr(safe_to_timestamp_sql(ident(col), default))
-
-
-def split_date_time(col: str) -> tuple[Column, Column]:
-    d, t = split_date_time_sql(ident(col))
-    return F.expr(d), F.expr(t)

@@ -14,9 +14,9 @@ get-scores.py:49-61) as broadcast joins + built-in expressions:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .datetime_utils import split_date_time
+from .datetime_utils import split_date_time_sql
 from .sql_text import ident, string_literal
 
 ET_LINK_PREFIX = "/main/conversations/view?session_id="
@@ -28,10 +28,6 @@ def et_link_sql(base_url: str, id_sql: str) -> str:
     return f"concat({prefix}, {id_sql})"
 
 
-def et_link(base_url: str, id_col: str = "id") -> Column:
-    return F.expr(et_link_sql(base_url, ident(id_col)))
-
-
 def with_enrichment_columns(sessions: DataFrame, agents: DataFrame,
                             groups: DataFrame, base_url: str = "https://app") -> DataFrame:
     """Attach agent_name/group_name (broadcast), date/time split, et_link."""
@@ -39,9 +35,9 @@ def with_enrichment_columns(sessions: DataFrame, agents: DataFrame,
                                   F.col("name").alias("agent_name")))
     g = F.broadcast(groups.select(F.col("id").alias("group_id"),
                                   F.col("name").alias("group_name")))
-    d, t = split_date_time("start_dt")
+    d, t = split_date_time_sql(ident("start_dt"))
     return (sessions
             .join(a, "agent_id", "left")
             .join(g, "group_id", "left")
-            .withColumns({"start_date": d, "start_time": t,
-                          "et_link": et_link(base_url)}))
+            .withColumns({"start_date": F.expr(d), "start_time": F.expr(t),
+                          "et_link": F.expr(et_link_sql(base_url, ident("id")))}))

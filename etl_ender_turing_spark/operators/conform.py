@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..functions.sql_text import ident, type_sql
 
@@ -66,6 +66,26 @@ def conform(df: DataFrame, target: T.StructType, table_name: str = "?",
     return df.selectExpr(*cols)
 
 
+def _outer_compare(a: DataFrame, b: DataFrame, key_cols: list[str],
+                   compare_cols: list[str] | None) -> tuple[DataFrame, Column]:
+    """Full outer join of ``a`` and ``b`` on the key, with ``_in_a`` /
+    ``_in_b`` presence flags, and the null-safe equality of the compared
+    columns (default: every non-key column of ``a``) as a Column."""
+    cmp_cols = compare_cols or [c for c in a.columns if c not in key_cols]
+    av = a.select(*key_cols,
+                  *[F.col(c).alias(f"_a_{c}") for c in cmp_cols],
+                  F.lit(1).alias("_in_a"))
+    bv = b.select(*key_cols,
+                  *[F.col(c).alias(f"_b_{c}") for c in cmp_cols],
+                  F.lit(1).alias("_in_b"))
+    # key-only tables (cmp_cols == []) still classify presence; "same"
+    # defaults True so no key is ever marked changed
+    same = F.lit(True)
+    for c in cmp_cols:
+        same = same & F.col(f"_a_{c}").eqNullSafe(F.col(f"_b_{c}"))
+    return av.join(bv, key_cols, "full_outer"), same
+
+
 def reconcile(a: DataFrame, b: DataFrame, key_cols: list[str],
               compare_cols: list[str] | None = None) -> DataFrame:
     """Table reconciliation: one summary row — keys only in A, only in B,
@@ -77,21 +97,7 @@ def reconcile(a: DataFrame, b: DataFrame, key_cols: list[str],
     a null-safe equality conjunction evaluated in the joined projection —
     no collect, works at any table size.
     """
-    from pyspark.sql import functions as F
-
-    cmp_cols = compare_cols or [c for c in a.columns if c not in key_cols]
-    av = a.select(*key_cols,
-                  *[F.col(c).alias(f"_a_{c}") for c in cmp_cols],
-                  F.lit(1).alias("_in_a"))
-    bv = b.select(*key_cols,
-                  *[F.col(c).alias(f"_b_{c}") for c in cmp_cols],
-                  F.lit(1).alias("_in_b"))
-    j = av.join(bv, key_cols, "full_outer")
-    # key-only tables (cmp_cols == []) still classify presence; "same"
-    # defaults True so no key is ever marked changed
-    same = F.lit(True)
-    for c in cmp_cols:
-        same = same & F.col(f"_a_{c}").eqNullSafe(F.col(f"_b_{c}"))
+    j, same = _outer_compare(a, b, key_cols, compare_cols)
     return j.agg(
         F.count(F.when(F.col("_in_b").isNull(), 1)).alias("n_only_a"),
         F.count(F.when(F.col("_in_a").isNull(), 1)).alias("n_only_b"),
@@ -118,21 +124,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key_cols: list[str],
     table. At 100 TB, bucket both snapshots by the key (readers.py
     bucketing note) and the join plans with zero exchanges.
     """
-    from pyspark.sql import functions as F
-
-    cmp_cols = compare_cols or [c for c in old.columns if c not in key_cols]
-    av = old.select(*key_cols,
-                    *[F.col(c).alias(f"_a_{c}") for c in cmp_cols],
-                    F.lit(1).alias("_in_a"))
-    bv = new.select(*key_cols,
-                    *[F.col(c).alias(f"_b_{c}") for c in cmp_cols],
-                    F.lit(1).alias("_in_b"))
-    j = av.join(bv, key_cols, "full_outer")
-    # key-only tables (cmp_cols == []) still classify presence; "same"
-    # defaults True so no key is ever marked changed
-    same = F.lit(True)
-    for c in cmp_cols:
-        same = same & F.col(f"_a_{c}").eqNullSafe(F.col(f"_b_{c}"))
+    j, same = _outer_compare(old, new, key_cols, compare_cols)
     change = (F.when(F.col("_in_a").isNull(), "added")
               .when(F.col("_in_b").isNull(), "removed")
               .when(~same, "changed"))

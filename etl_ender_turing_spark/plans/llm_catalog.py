@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import dedup as dd
-# clear_fixture_cache: the name bench.py and perfbench call between samples
+# clear_fixture_cache: the name perfbench calls between ops
 from ..functions.barrier import (clear_shared_cuts as clear_fixture_cache,
                                  lineage_cut, shared_cut)
 from ..operators import sampling as sp

@@ -20,6 +20,7 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 from types import SimpleNamespace
 
+from py4j import protocol
 from pyspark.sql import SparkSession
 
 DEFAULT_CONFS: dict[str, str] = {
@@ -65,12 +66,21 @@ def get_spark(app_name: str = "etl-ender-turing-spark", master: str | None = Non
     return builder.getOrCreate()
 
 
+# the command Py4J sends to release a JVM object's Python reference
+_PY4J_RELEASE = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+
 @contextmanager
 def count_py4j_calls(spark: SparkSession) -> Iterator[SimpleNamespace]:
     """Count the Py4J round trips made inside the block: every
-    ``send_command`` of the session's gateway client, from any thread.
-    Building a plan runs no Spark job, so this count (not a job count) is
-    what its driver-side cost scales with.
+    ``send_command`` of the session's gateway client, from any thread,
+    except reference releases. Building a plan runs no Spark job, so this
+    count (not a job count) is what its driver-side cost scales with.
+
+    Py4J's finalizer thread sends one release per garbage-collected
+    JavaObject whenever it gets to it, so releases of objects dropped
+    before the block (a ``gc.collect()`` frees thousands) would land in
+    the count at random.
 
         with count_py4j_calls(spark) as n:
             build(...)
@@ -80,9 +90,10 @@ def count_py4j_calls(spark: SparkSession) -> Iterator[SimpleNamespace]:
     send = client.send_command
     counter = SimpleNamespace(calls=0)
 
-    def counting(*args, **kwargs):
-        counter.calls += 1
-        return send(*args, **kwargs)
+    def counting(command, *args, **kwargs):
+        if not command.startswith(_PY4J_RELEASE):
+            counter.calls += 1
+        return send(command, *args, **kwargs)
 
     client.send_command = counting
     try:

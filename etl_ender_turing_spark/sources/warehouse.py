@@ -74,27 +74,33 @@ def upsert_bucketed(spark: SparkSession, source: DataFrame, table: str,
                     path: str | None = None) -> None:
     """Incremental MERGE-upsert that PRESERVES the bucketed layout.
 
-    Same semantics as ``upsert_parquet`` (intra-batch last-write-wins
-    dedup, then UPDATE ∪ INSERT ∪ KEEP against the live table), but the
-    rewrite lands through ``bucketBy`` again, so every sync keeps the
-    zero-Exchange join property instead of silently degrading the layout.
-    The merged frame is localCheckpoint-ed to break lineage off the table
-    being overwritten (Spark refuses to overwrite its own input).
+    Same semantics as ``upsert_parquet`` and the same one pass over the
+    batch (dedup and one eager local cut, whose Observation counts the
+    rows): an empty batch returns there, the table untouched and a
+    missing one not created. Otherwise UPDATE ∪ INSERT ∪ KEEP against
+    the live table, and the rewrite lands through ``bucketBy`` again, so
+    every sync keeps the zero-Exchange join property instead of silently
+    degrading the layout. The merged frame is localCheckpoint-ed to break
+    lineage off the table being overwritten (Spark refuses to overwrite
+    its own input).
 
     At 100 TB pair this with date partitioning and merge per partition
     (``upsert_parquet_partitioned`` pattern); the bucket spec must stay
     identical across syncs or co-located joins lose their guarantee.
     """
-    from ..operators.upsert import dedup_latest, merge_dataframes
+    from ..functions.sql_text import ident
+    from ..operators.upsert import _cut_batch, _merge_deduped
 
     bucket_cols = bucket_cols or key
+    src, got = _cut_batch(source, key, order_col)
+    if not got.get("n"):
+        return
     if not spark.catalog.tableExists(table):
-        write_bucketed(dedup_latest(source, key, order_col), table,
-                       bucket_cols, n_buckets, path=path)
+        write_bucketed(src, table, bucket_cols, n_buckets, path=path)
         return
     target = spark.table(table)
-    merged = merge_dataframes(target, source.select(*target.columns),
-                              key, order_col)
+    merged = _merge_deduped(target, src.selectExpr(*map(ident, target.columns)),
+                            key)
     # local in every barrier mode: a storage cut would write the rows twice
     merged = merged.localCheckpoint(eager=True)
     write_bucketed(merged, table, bucket_cols, n_buckets, path=path)

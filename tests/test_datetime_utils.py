@@ -7,8 +7,9 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from etl_ender_turing_spark.functions import safe_to_timestamp, round_to_second
-from etl_ender_turing_spark.functions.sql_text import string_literal
+from etl_ender_turing_spark.functions.datetime_utils import (
+    round_to_second_sql, safe_to_timestamp_sql)
+from etl_ender_turing_spark.functions.sql_text import ident, string_literal
 
 
 def _one(spark, s, expr):
@@ -19,41 +20,41 @@ def _one(spark, s, expr):
 def test_parses_iso_microseconds_and_rounds(spark):
     # .620796 rounds UP to :45 (pandas .dt.round('s') parity)
     assert _one(spark, "2024-06-26T10:15:44.620796",
-                safe_to_timestamp("v")) == datetime(2024, 6, 26, 10, 15, 45)
+                F.expr(safe_to_timestamp_sql(ident("v")))) == datetime(2024, 6, 26, 10, 15, 45)
 
 
 def test_rounds_down_below_half_second(spark):
     assert _one(spark, "2024-06-26T10:15:44.420796",
-                safe_to_timestamp("v")) == datetime(2024, 6, 26, 10, 15, 44)
+                F.expr(safe_to_timestamp_sql(ident("v")))) == datetime(2024, 6, 26, 10, 15, 44)
 
 
 def test_out_of_bounds_date_defaults_1900(spark):
     # reference safe_to_datetime: '0001-01-01' -> 1900-01-01 (utils.py:197-205)
     assert _one(spark, "0001-01-01T00:00:00",
-                safe_to_timestamp("v")) == datetime(1900, 1, 1)
+                F.expr(safe_to_timestamp_sql(ident("v")))) == datetime(1900, 1, 1)
 
 
 def test_unparseable_defaults_1900(spark):
     assert _one(spark, "not-a-date",
-                safe_to_timestamp("v")) == datetime(1900, 1, 1)
+                F.expr(safe_to_timestamp_sql(ident("v")))) == datetime(1900, 1, 1)
 
 
 def test_regex_salvage_on_tz_suffix(spark):
     # malformed with trailing garbage -> embedded ISO core is salvaged
     # (Transform.py:245-250)
     assert _one(spark, "2024-07-08T07:30:44garbage+03:00",
-                safe_to_timestamp("v")) == datetime(2024, 7, 8, 7, 30, 44)
+                F.expr(safe_to_timestamp_sql(ident("v")))) == datetime(2024, 7, 8, 7, 30, 44)
 
 
 def test_null_stays_null(spark):
     df = spark.createDataFrame([(None,)], "v string")
-    assert df.select(safe_to_timestamp("v").alias("r")).collect()[0]["r"] is None
+    assert df.select(F.expr(safe_to_timestamp_sql(ident("v"))).alias("r")).collect()[0]["r"] is None
 
 
 def test_round_to_second_is_codegen_expression(spark):
     # stays JVM-side: no BatchEvalPython in the plan
     df = spark.range(1).select(F.current_timestamp().alias("t")).select(
-        round_to_second("t").alias("r"))
+        F.expr(round_to_second_sql(ident("t"))).alias("r"))
     assert "BatchEvalPython" not in df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -95,7 +96,7 @@ def test_safe_to_timestamp_same_under_parser_settings(spark, conf):
              (None, None)]
     with _session_conf(spark, conf):
         df = spark.createDataFrame([(v,) for v, _ in cases], "v string")
-        got = [r.r for r in df.select(safe_to_timestamp("v").alias("r")).collect()]
+        got = [r.r for r in df.select(F.expr(safe_to_timestamp_sql(ident("v"))).alias("r")).collect()]
     assert got == [want for _, want in cases]
 
 

@@ -88,6 +88,43 @@ def test_upsert_bucketed_keeps_layout_and_merges(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS d_b")
 
 
+def test_upsert_bucketed_empty_batch_touches_nothing(spark, tmp_path):
+    """An empty batch returns after the batch's one pass: no bucket file
+    is rewritten, and a missing table is not created."""
+    import os
+    import time
+
+    from etl_ender_turing_spark.sources.warehouse import upsert_bucketed
+
+    path = str(tmp_path / "e_b")
+    rows = spark.createDataFrame([(i, f"v{i}", "d1") for i in range(100)],
+                                 "k long, v string, updated string")
+    empty = rows.limit(0)
+
+    def files():
+        return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+                for d, _, fs in os.walk(path) for f in fs}
+
+    try:
+        upsert_bucketed(spark, empty, "e_missing", ["k"], 4,
+                        order_col="updated", path=str(tmp_path / "e_missing"))
+        assert not spark.catalog.tableExists("e_missing")
+        assert not os.path.exists(tmp_path / "e_missing")
+
+        upsert_bucketed(spark, rows, "e_b", ["k"], 4, order_col="updated",
+                        path=path)
+        before = files()
+        assert before
+        time.sleep(0.05)
+        upsert_bucketed(spark, empty, "e_b", ["k"], 4, order_col="updated",
+                        path=path)
+        assert files() == before
+        assert spark.table("e_b").count() == 100
+    finally:
+        spark.sql("DROP TABLE IF EXISTS e_b")
+        spark.sql("DROP TABLE IF EXISTS e_missing")
+
+
 def test_surrogate_key_join_equals_guid_join(spark):
     from etl_ender_turing_spark.sources.warehouse import with_surrogate_key
 

@@ -1,9 +1,11 @@
 """Local mirror of the driver's correctness gate.
 
-Runs every catalog query on Spark AND its DuckDB oracle over the same
-parquet, then compares row count, column names, and an order-insensitive
-value multiset (rows sorted, columns sorted by name, values normalized).
-Use while iterating:
+Runs every catalog query (or the named ones) on Spark AND its DuckDB
+oracle over the same parquet, then compares row count, column names, and
+an order-insensitive value multiset (rows sorted, columns sorted by name,
+values normalized). Each line carries the Spark seconds (build and
+``toPandas``) and the oracle seconds, so a sweep also ranks where the
+correctness gate's serial budget goes. Use while iterating:
     python tools/check_oracle.py [sf_dir] [query ...] [--conf k=v ...]
 ``--conf`` (repeatable) sets a session conf, e.g. a configuration sweep
 with ``--conf spark.etl.lineageCut.mode=storage``.
@@ -18,12 +20,11 @@ import sys
 import time
 from datetime import datetime
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_ender_turing_spark.plans import CATALOG
+from etl_ender_turing_spark.plans.runner import oracle_db, run_query
 from etl_ender_turing_spark.session import get_spark
-from etl_ender_turing_spark.sources.readers import TESTDATA_TABLES
 
 
 def norm(v):
@@ -93,33 +94,28 @@ def main() -> int:
     ap.add_argument("--conf", type=_conf_pair, action="append", default=[],
                     metavar="K=V", help="session conf (repeatable)")
     args = ap.parse_args()
-    sf_dir, only = args.sf_dir, set(args.queries)
-
-    from etl_ender_turing_spark.plans import CATALOG
-
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
+    sf_dir = args.sf_dir
+    con = oracle_db(sf_dir)
     spark = get_spark("oracle-check", extra_conf=dict(args.conf))
     failures = 0
-    for name, spec in CATALOG.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
+    for name in args.queries or CATALOG:
         try:
-            sdf = spec.builder(spark, sf_dir)
-            scols = sdf.columns
-            spdf = sdf.toPandas()
-            srows = [tuple(r) for r in spdf.itertuples(index=False, name=None)]
+            # keep the shared cuts across queries, as the correctness
+            # gate's one serial pass does
+            (s,) = run_query(spark, sf_dir, name, to_pandas=True,
+                             clear_cuts=False)
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             failures += 1
             continue
+        scols, spdf = s.df.columns, s.pdf
+        srows = [tuple(r) for r in spdf.itertuples(index=False, name=None)]
+        spec = CATALOG[name]
         if spec.oracle is None:
             print(f"ok   {name}: rows-only ({len(srows)} rows) "
-                  f"[{time.time() - t0:.2f}s]")
+                  f"[spark {s.total_s:.2f}s]")
             continue
+        t0 = time.perf_counter()
         try:
             odf = con.execute(spec.oracle).df()
             ocols = list(odf.columns)
@@ -128,6 +124,7 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error: {e}")
             failures += 1
             continue
+        oracle_s = time.perf_counter() - t0
         problems = pandas_canon_problems(spdf, odf)
         if sorted(scols) != sorted(ocols):
             problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
@@ -146,7 +143,7 @@ def main() -> int:
             failures += 1
         else:
             print(f"ok   {name}: {len(srows)} rows hash-match "
-                  f"[{time.time() - t0:.2f}s]")
+                  f"[spark {s.total_s:.2f}s, oracle {oracle_s:.2f}s]")
     spark.stop()
     return 1 if failures else 0
 

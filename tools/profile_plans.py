@@ -1,17 +1,21 @@
-"""Optimization profiler: per-query noop-sink floors + formatted plans.
+"""Plan profiler: per-query noop-sink floors, build cost and executed plans.
 
 Usage:
-    python tools/profile_plans.py <outdir> <tag> <query> [query ...]
+    python tools/profile_plans.py <outdir> <tag> [query ...]
                                   [--sf DIR] [--runs N]
 
-For each named catalog query: clears the shared cuts, times the noop
-sink N times (guide §1.4), records the floor, and writes the
-pre-execution ``explain("formatted")`` plus the AQE-final executed plan
-to ``<outdir>/<query>_<tag>.txt`` (e.g. ``plans/r13``, tag = before /
-after). Prints one JSON line per query so A/B runs diff cleanly; besides
-the floor it carries the builder call's own cost, fastest of the N runs:
-``build_s`` (its wall time, eager cuts included) and ``py4j_calls`` (its
-Py4J round trips, the driver-side cost of building the plan).
+For each named catalog query (default: every ``bench.BENCH_QUERIES``
+query), runs N noop-sink samples through ``plans.runner`` (guide §1.4),
+then executes the query's own plan once more for its AQE-final physical
+plan. Writes the pre-execution ``explain("formatted")`` plus that final
+plan to ``<outdir>/<query>_<tag>.txt`` (e.g. ``plans/r13``, tag =
+before / after), and one table row per query to ``<outdir>/PLANS.md``
+(the repo's PLANS.md is that file for the bench queries at sf0.001).
+Prints one JSON line per query so A/B runs diff cleanly: the floor and
+samples, the builder call's own cost, fastest of the N runs —
+``build_s`` (its wall time, eager cuts included) and ``py4j_calls``
+(its Py4J round trips, the driver-side cost of building the plan) —
+and the final plan's shuffle budget (``runner.summarize``).
 """
 
 from __future__ import annotations
@@ -19,20 +23,26 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shlex
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_ender_turing_spark.plans import CATALOG, llm_catalog
-from etl_ender_turing_spark.session import count_py4j_calls, get_spark
+from bench import BENCH_QUERIES
+from etl_ender_turing_spark.plans.runner import (executed_plan, run_query,
+                                                 summarize, warm_up)
+from etl_ender_turing_spark.session import get_spark
+
+# the PLANS.md columns: keys of the JSON line
+COLUMNS = ("query", "floor", "build_s", "py4j_calls", "exchanges", "reused",
+           "broadcasts", "smj", "bhj", "codegen", "pushed")
 
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("outdir")
     ap.add_argument("tag")
-    ap.add_argument("queries", nargs="+")
+    ap.add_argument("queries", nargs="*")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
@@ -41,45 +51,54 @@ def main() -> None:
 
     spark = get_spark("profile-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    # warmup: JVM + parquet footer caches (same convention as bench.py)
-    for t in ("lineitem", "documents", "embeddings"):
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
+    warm_up(spark, sf_dir)
 
-    for name in args.queries:
-        spec = CATALOG.get(name)
-        if spec is None:
-            print(json.dumps({"query": name, "err": "not in CATALOG"}))
-            continue
-        samples, builds, calls = [], [], []
-        df = None
-        for _ in range(args.runs):
-            llm_catalog.clear_fixture_cache()
-            spark.sparkContext.setJobDescription(f"profile {name}")
-            t0 = time.perf_counter()
-            with count_py4j_calls(spark) as n:
-                df = spec.builder(spark, sf_dir)
-            builds.append(time.perf_counter() - t0)
-            calls.append(n.calls)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(round(time.perf_counter() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        # formatted pre-execution plan + the AQE-final executed plan of
-        # the LAST sample (already executed, so executedPlan is final)
+    rows = []
+    for name in args.queries or BENCH_QUERIES:
+        spark.sparkContext.setJobDescription(f"profile {name}")
+        runs = run_query(spark, sf_dir, name, runs=args.runs)
+        df = runs[-1].df
+        # formatted pre-execution plan of the LAST sample, and its plan
+        # executed to the AQE-final form
         formatted = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        executed = df._jdf.queryExecution().executedPlan().toString()
+        executed = executed_plan(df)
+        spark.sparkContext.setJobDescription(None)
+        samples = [round(s.total_s, 3) for s in runs]
         path = os.path.join(outdir, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(f"# {name} @ {sf_dir}  noop-sink samples: {samples}\n")
             f.write("\n== explain(formatted) ==\n")
             f.write(formatted)
-            f.write("\n\n== AQE-final executed plan (last sample) ==\n")
+            f.write("\n\n== AQE-final executed plan ==\n")
             f.write(executed)
-        print(json.dumps({"query": name, "floor": min(samples),
-                          "samples": samples,
-                          "build_s": round(min(builds), 3),
-                          "py4j_calls": min(calls), "plan": path}))
+        line = {"query": name, "floor": min(samples), "samples": samples,
+                "build_s": round(min(s.build_s for s in runs), 3),
+                "py4j_calls": min(s.py4j_calls for s in runs),
+                **summarize(executed), "plan": path}
+        print(json.dumps(line))
+        rows.append("| " + " | ".join(str(line[c]) for c in COLUMNS) + " |")
     spark.stop()
+
+    command = shlex.join(["python", "tools/profile_plans.py", *sys.argv[1:]])
+    with open(os.path.join(outdir, "PLANS.md"), "w") as f:
+        f.write("\n".join([
+            "# PLANS — build cost and executed physical-plan budget per query",
+            "",
+            f"Generated by `{command}` on local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+            f" (written to `{outdir}/PLANS.md`).",
+            "",
+            f"| {' | '.join(COLUMNS)} |", "|---" * len(COLUMNS) + "|", *rows,
+            "",
+            f"`floor` is the fastest of {args.runs} noop-sink samples (build "
+            "and action) in seconds; `build_s` and `py4j_calls` the fastest "
+            "builder call alone, eager cuts and probes included. The rest "
+            "read the AQE-final plan: `exchanges` are real shuffles "
+            "(`reused` of them AQE exchange reuse), joins split into "
+            "sort-merge (`smj`) and broadcast-hash (`bhj`), `codegen` counts "
+            "WholeStageCodegen spans, `pushed` marks a predicate reaching a "
+            "parquet scan.",
+        ]) + "\n")
 
 
 if __name__ == "__main__":
